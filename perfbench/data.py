@@ -1,70 +1,56 @@
-"""Seeded inputs for the benchmark workloads.
+"""Inputs of the ``tables`` workload.
 
-Every table is a pure function of ``seed`` and its size, so two runs with
-the same seed stage byte-identical inputs.  The tables mirror the shape of
-the repo's ``lineitem`` and ``documents`` test tables (same column names
-and types); they are generated here because the benchmark reads only
-files of its own checkout.
+``perfbench/data/`` holds slices of the repository's TPC-H-style test
+tables at scale factor 0.1: the first 200k rows of ``lineitem`` and all
+5k rows of ``documents``, as they are (same columns, types and values).
+The benchmark reads only files of its own checkout, so the slices are
+committed; rebuild them with
+
+    python3 perfbench/data.py <dir holding the sf0.1 lineitem.parquet and documents.parquet>
+
+``load`` takes the first ``rows`` rows of a slice and rotates the row
+order by an offset drawn from ``seed``, so that the row a split starts
+at, and every group's contents, depend on the seed while the data does
+not.  The same seed gives the same table.
 """
 
 from __future__ import annotations
 
+import os
+import sys
+
 import numpy as np
 import pyarrow as pa
+import pyarrow.parquet as pq
 
-_DAY_US = 86_400 * 1_000_000
-_EPOCH_1992 = 694_224_000 * 1_000_000  # 1992-01-01 in us
-_WORDS = np.array(
-    "spark column vector batch scan sort hash join filter value table part "
-    "line order customer query agg group stream fast slow small key index "
-    "page chunk codec encode decode bloom range token".split())
+DATA = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+SLICE_ROWS = {"lineitem": 200_000, "documents": 5_000}
 
 
-def _rng(seed: int, stream: int) -> np.random.Generator:
-    return np.random.default_rng([seed, stream])
-
-
-def lineitem(n_rows: int, seed: int) -> pa.Table:
-    """TPC-H-style lineitem: 1-7 lines per order, clustered by order key,
-    then rotated by a seeded offset (the clustering survives, the row a
-    split starts at does not)."""
-    r = _rng(seed, 1)
-    lines = r.integers(1, 8, size=n_rows // 2 + 8)
-    order_of = np.repeat(np.arange(1, len(lines) + 1, dtype=np.int64), lines)[:n_rows]
-    linenum = (np.arange(len(order_of))
-               - np.repeat(np.cumsum(lines) - lines, lines)[:n_rows] + 1)
-    qty = r.integers(1, 51, size=n_rows).astype(np.float64)
-    price = np.round(qty * r.uniform(900.0, 2100.0, size=n_rows), 2)
-    ship = _EPOCH_1992 + r.integers(0, 7 * 365, size=n_rows) * _DAY_US
-    t = pa.table({
-        "l_orderkey": order_of * 4,
-        "l_partkey": r.integers(1, 20_001, size=n_rows),
-        "l_suppkey": r.integers(1, 1_001, size=n_rows),
-        "l_linenumber": linenum.astype(np.int32),
-        "l_quantity": qty,
-        "l_extendedprice": price,
-        "l_discount": r.integers(0, 11, size=n_rows) / 100.0,
-        "l_tax": r.integers(0, 9, size=n_rows) / 100.0,
-        "l_returnflag": np.array(["A", "N", "R"])[r.integers(0, 3, size=n_rows)],
-        "l_linestatus": np.array(["O", "F"])[r.integers(0, 2, size=n_rows)],
-        "l_shipdate": pa.array(ship, pa.timestamp("us")),
-    })
-    off = int(r.integers(0, n_rows))
+def load(name: str, rows: int, seed: int) -> pa.Table:
+    """The first ``rows`` rows of slice ``name``, rotated by a seeded offset."""
+    t = pq.read_table(os.path.join(DATA, f"{name}.parquet"))
+    if rows > t.num_rows:
+        raise ValueError(f"{name}: {rows} rows asked, the slice has {t.num_rows}")
+    t = t.slice(0, rows)
+    off = int(np.random.default_rng([seed, 1]).integers(0, rows))
     return pa.concat_tables([t.slice(off), t.slice(0, off)]).combine_chunks()
 
 
-def documents(n_rows: int, seed: int) -> pa.Table:
-    """Short word-salad documents over a small vocabulary (FSST's case)."""
-    r = _rng(seed, 3)
-    n_words = r.integers(10, 120, size=n_rows)
-    words = _WORDS[r.zipf(1.3, size=int(n_words.sum())) % len(_WORDS)]
-    ends = np.cumsum(n_words)
-    text = [" ".join(words[e - k:e]) for e, k in zip(ends, n_words)]
-    return pa.table({
-        "doc_id": np.arange(n_rows, dtype=np.int64),
-        "text": text,
-        "lang": np.array(["en", "zh", "de", "fr", "es"])[
-            r.choice(5, size=n_rows, p=[.5, .2, .1, .1, .1])],
-        "source": np.char.add("src", r.integers(0, 10, size=n_rows).astype(str)),
-        "n_chars": np.array([len(s) for s in text], dtype=np.int64),
-    })
+def main(argv: list[str]) -> int:
+    if len(argv) != 1:
+        print(__doc__, file=sys.stderr)
+        return 2
+    os.makedirs(DATA, exist_ok=True)
+    for name, rows in SLICE_ROWS.items():
+        t = pq.read_table(os.path.join(argv[0], f"{name}.parquet")).slice(0, rows)
+        t = t.replace_schema_metadata(None)
+        pq.write_table(t, os.path.join(DATA, f"{name}.parquet"),
+                       compression="zstd", compression_level=19,
+                       row_group_size=len(t))
+        print(f"{name}: {t.num_rows} rows")
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main(sys.argv[1:]))

@@ -74,16 +74,19 @@ SPARK_FIELDS = ("wall_ms", "tasks", "task_sum_ms", "task_max_ms",
                 "dispatch_ms", "sched_ms")
 
 
-# Written to the self-time file but left off the result line: times that
-# are zero on one workload by construction (F1 has no floats, so ALP never
-# runs on tokens; the tables have no list columns, so RANK never runs
-# there) and codecs the selector picks on neither workload.
+# Written to the self-time file but left off the result line: metrics
+# that read 0 on one workload by construction, times and counts alike.
+# F1 rows have no floats, so ALP never runs on tokens, and the selector
+# picks neither FOR nor PLAIN there; the tables have no list columns, so
+# the RANK list path never runs on them; neither workload picks the
+# remaining codecs.
 REPORT_ONLY = frozenset(
-    ["kernels.alp_encode_ms", "kernels.alp_decode_ms",
-     "kernels.alp_bits_per_value_ms", "chunk.rank_encode_ms",
-     "chunk.rank_decode_ms"]
-    + [f"chunk.codec.{c}.count" for c in ("RLE", "DELTA_BP", "DELTA_FOR", "BSS",
-                                         "DELTA_LENGTH", "DELTA_BA")])
+    [f"kernels.{f}{x}" for f in ("alp_encode", "alp_decode", "alp_bits_per_value")
+     for x in ("_ms", ".calls")]
+    + ["chunk.rank_encode_ms", "chunk.rank_decode_ms"]
+    + [f"chunk.codec.{c}.count" for c in ("ALP", "FOR", "PLAIN", "RLE", "DELTA_BP",
+                                         "DELTA_FOR", "BSS", "DELTA_LENGTH",
+                                         "DELTA_BA")])
 
 
 def unit_of(metric: str) -> str:
@@ -219,7 +222,9 @@ class SparkOpTracer:
         self.group = f"perfbench-{self.n}"
         self.sc.setJobGroup(self.group, label)
 
-    def end(self, label: str, wall_s: float):
+    def end(self, label: str, wall_s: float, rep: int):
+        """Record the op that ran since ``begin``, failed or not; ``rep``
+        is the Runner rep it ran in."""
         tasks = crit = total = 0.0
         for jid in self.sc.statusTracker().getJobIdsForGroup(self.group):
             for sid in self._job(jid)["stageIds"]:
@@ -229,7 +234,7 @@ class SparkOpTracer:
                 crit += max(durs, default=0.0)
         wall = wall_s * 1000.0
         self.records[label].append({
-            "wall_ms": wall, "tasks": tasks, "task_sum_ms": total,
+            "rep": rep, "wall_ms": wall, "tasks": tasks, "task_sum_ms": total,
             "task_max_ms": crit, "dispatch_ms": wall - crit,
             "sched_ms": wall - total / self.slots})
 
@@ -261,17 +266,22 @@ class SparkOpTracer:
     def reset(self):
         self.records.clear()
 
-    def summary(self, reps: int) -> dict:
+    def summary(self) -> dict:
         """Per op and field: for the bulk ops, which run once per dataset
         in a rep, the median over reps of the rep's total; for the queries,
         the median over calls."""
         out = {}
         for op in SPARK_OPS:
             recs = self.records.get(op, [])
-            per_rep = len(recs) // reps if op in BULK_SPARK_OPS else 1
+            if op in BULK_SPARK_OPS:
+                groups = defaultdict(list)
+                for r in recs:
+                    groups[r["rep"]].append(r)
+                recs = list(groups.values())
+            else:
+                recs = [[r] for r in recs]
             for f in SPARK_FIELDS:
-                vals = [sum(r[f] for r in recs[i:i + per_rep])
-                        for i in range(0, len(recs), per_rep)]
+                vals = [sum(r[f] for r in g) for g in recs]
                 out[f"spark.{op}.{f}"] = statistics.median(vals) if vals else 0.0
         return out
 
@@ -458,7 +468,7 @@ def layer_metrics(spec, st, spark_tracer: SparkOpTracer, base: dict,
                             and (name is None or n == name))
 
     m: dict[str, float] = {}
-    m.update(spark_tracer.summary(base["timed_reps"]))
+    m.update(spark_tracer.summary())
     m["engine.read_ms"] = ms("read", "engine", "read")
     m["engine.encode_group_ms"] = ms("encode", "engine", "encode_chunk_group")
     m["engine.decode_group_ms"] = ms("decode", "engine", "decode_chunk_group")

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """End-to-end benchmark of the sparkcodec engine.
 
-    python3 perfbench/run.py --workload tokens --seed 1 --seconds 18 --trace 0
+    python3 perfbench/run.py --workload tokens --seed 1 --seconds 20 --trace 0
 
 Run from the repository root.  One client drives one Spark session
 (``local[N]``, N = usable cores) in a closed loop: each rep runs the
@@ -21,6 +21,7 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import statistics
 import sys
 import tempfile
@@ -29,13 +30,13 @@ import traceback
 from dataclasses import dataclass, field
 
 HERE = os.path.dirname(os.path.abspath(__file__))
-SETUPS = 3  # set-ups per run on one session; setup_s is their median
 
 
 @dataclass
 class Spec:
-    """One workload: its datasets (name -> rows), the dataset the queries
-    run on, and the columns the queries use."""
+    """One workload: its datasets (name -> rows: F1 rows generated, or
+    the leading rows of a committed table slice), the dataset the queries
+    run on, the columns the queries use, and the query rounds per rep."""
 
     name: str
     rows: dict[str, int]
@@ -43,21 +44,17 @@ class Spec:
     key: str            # bloom column of the point lookups
     range_col: str      # stats column of the range scans
     pruned: list[str]   # projection of the pruned decode
+    # query rounds per rep: a workload with two datasets fits half the
+    # reps in a run, so it runs two rounds to keep four query samples
+    query_rounds: int = 1
 
-
-# sort keys that make each dataset's rows unique (order-free comparison)
-SORT_KEYS = {
-    "tokens": ["doc_id"],
-    "lineitem": ["l_orderkey", "l_linenumber"],
-    "documents": ["doc_id"],
-}
 
 WORKLOADS = {
     "tokens": Spec("tokens", {"tokens": 16_000}, "tokens",
                    key="doc_id", range_col="n_tok", pruned=["doc_id", "n_tok"]),
     "tables": Spec("tables", {"lineitem": 200_000, "documents": 5_000}, "lineitem",
                    key="l_orderkey", range_col="l_shipdate",
-                   pruned=["l_orderkey", "l_shipdate"]),
+                   pruned=["l_orderkey", "l_shipdate"], query_rounds=2),
 }
 
 BULK_OPS = ("encode", "builtin", "decode", "decode_write")
@@ -179,6 +176,7 @@ class State:
     raw_bytes: int = 0
     tokens: int = 0
     layout: dict = field(default_factory=dict)                # files, row groups
+    setup_parts_s: dict = field(default_factory=dict)         # stage, checksum, pre_encode
 
 
 def checksum(df, *col_sets):
@@ -198,8 +196,8 @@ def checksum(df, *col_sets):
 
 
 def stage(spark, spec: Spec, seed: int, work: str) -> State:
-    """Generate and stage the inputs, pre-encode the query table, and
-    compute every expected answer from the raw input."""
+    """Generate or load and stage the inputs, pre-encode the query table,
+    and compute every expected answer from the raw input."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -210,20 +208,22 @@ def stage(spark, spec: Spec, seed: int, work: str) -> State:
     from sparkcodec.engine import encode_to_parquet
 
     st = State()
+    parts = st.setup_parts_s = dict.fromkeys(("stage", "checksum", "pre_encode"), 0.0)
     for name, rows in spec.rows.items():
+        t0 = time.perf_counter()
         path = os.path.join(work, "src", name)
         shutil.rmtree(path, ignore_errors=True)
         os.makedirs(path)
         if name == "tokens":
             # the rows synth_tokens(spark, rows, seed, 2 * nproc()) yields,
             # one file per partition, staged without a Spark job
-            parts = 2 * nproc()
-            for p in range(parts):
-                ids = np.arange(p * rows // parts, (p + 1) * rows // parts)
+            n_files = 2 * nproc()
+            for p in range(n_files):
+                ids = np.arange(p * rows // n_files, (p + 1) * rows // n_files)
                 pq.write_table(pa.Table.from_batches([gen_rows(ids, seed)]),
                                os.path.join(path, f"part-{p:03d}.parquet"))
         else:
-            t = getattr(data, name)(rows, seed)
+            t = data.load(name, rows, seed)
             # one row group: the engine must range-split it to parallelize
             pq.write_table(t, os.path.join(path, "part-0.parquet"),
                            row_group_size=len(t))
@@ -233,21 +233,26 @@ def stage(spark, spec: Spec, seed: int, work: str) -> State:
         st.raw_bytes += tbl.nbytes
         if "tokens" in tbl.column_names:
             st.tokens += pc.sum(pc.list_value_length(tbl.column("tokens"))).as_py()
+        t1 = time.perf_counter()
+        parts["stage"] += t1 - t0
         if name == spec.query_dataset:
             st.checksums[name], st.pruned_checksum = checksum(
                 spark.read.parquet(path), tbl.column_names, spec.pruned)
         else:
             st.checksums[name] = checksum(spark.read.parquet(path), tbl.column_names)
+        parts["checksum"] += time.perf_counter() - t1
         files = [f for f in os.listdir(path) if f.endswith(".parquet")]
         st.layout[name] = {"files": len(files), "row_groups": sum(
             pq.ParquetFile(os.path.join(path, f)).num_row_groups for f in files)}
 
+    t0 = time.perf_counter()
     qd = spec.query_dataset
     st.query_dir = os.path.join(work, "query", qd)
     shutil.rmtree(st.query_dir, ignore_errors=True)
     encode_to_parquet(spark, st.src[qd], st.query_dir,
                       bloom_columns=(spec.key,), stat_columns=(spec.range_col,),
                       split_payload=True).collect()
+    parts["pre_encode"] = time.perf_counter() - t0
 
     rng = np.random.default_rng([seed, 10])
     src = st.tables[qd]
@@ -257,9 +262,13 @@ def stage(spark, spec: Spec, seed: int, work: str) -> State:
     if spec.key == "doc_id":  # ids past the generated range never occur
         st.misses = [f"web-{len(keys) + int(i):012d}"
                      for i in rng.integers(0, 10**6, size=n)]
-    else:  # order keys are multiples of 4; in-range odd keys never occur
-        st.misses = [k + 1 for k in keys.take(
-            rng.integers(0, len(keys), size=n)).to_pylist()]
+    else:  # in-range order keys the slice does not hold
+        held = set(keys.to_pylist())
+        lo, hi = pc.min(keys).as_py(), pc.max(keys).as_py()
+        while len(st.misses) < n:
+            k = int(rng.integers(lo, hi))
+            if k not in held:
+                st.misses.append(k)
     vals = src.column(spec.range_col).cast("int64").to_numpy()
     for lo in rng.choice(vals, size=64):
         if spec.range_col == "l_shipdate":  # a two-day window
@@ -278,14 +287,15 @@ class CheckFailed(Exception):
     pass
 
 
-def same_rows(got, want, keys):
+def same_rows(got, want):
     """Raise unless two Arrow tables hold the same rows in any order."""
     import pyarrow as pa
 
     got = pa.table({c: got.column(c) for c in want.column_names}).cast(want.schema)
     if got.num_rows != want.num_rows:
         raise CheckFailed(f"{got.num_rows} rows, expected {want.num_rows}")
-    by = [(k, "ascending") for k in keys]
+    by = [(f.name, "ascending") for f in want.schema
+          if not pa.types.is_nested(f.type)]  # list columns cannot be keys
     if not got.sort_by(by).equals(want.sort_by(by)):
         raise CheckFailed("row contents differ from the source")
 
@@ -304,7 +314,7 @@ def expected_rows(tbl, col, lo, hi=None):
 class Runner:
     """Runs, times and checks ops; failures are counted and printed."""
 
-    def __init__(self, sess: Session, spec: Spec, st: State | None, work: str,
+    def __init__(self, sess: Session, spec: Spec, st: State, work: str,
                  spark_tracer=None):
         self.sess, self.spec, self.st, self.work = sess, spec, st, work
         self.spark_tracer = spark_tracer
@@ -315,6 +325,7 @@ class Runner:
         self.sizes: dict[str, int] = {}
         self.rss = 0.0
         self.q = 0  # index into the seeded query sequences
+        self.n_rep = 0  # reps run so far, the warm-up included
         self.steal_frac = 0.0
 
     def op(self, label: str, fn, check=None, on: str = "") -> float:
@@ -324,34 +335,37 @@ class Runner:
         if self.spark_tracer is not None:
             self.spark_tracer.begin(label)
         t0 = time.perf_counter()
+        dt = None
         try:
             out = fn()
             dt = time.perf_counter() - t0
-            if self.spark_tracer is not None:
-                self.spark_tracer.end(label, dt)
             if check is not None:
                 check(out)
         except Exception:  # noqa: BLE001 -- counted and reported below
-            dt = time.perf_counter() - t0
             self.failed += 1
             print(f"FAILED op {label} on {on}:\n{traceback.format_exc()}",
                   file=sys.stderr)
+        finally:
+            if dt is None:  # fn raised: time it to the failure
+                dt = time.perf_counter() - t0
+            if self.spark_tracer is not None:
+                self.spark_tracer.end(label, dt, self.n_rep)
         self.rss = max(self.rss, python_worker_hwm_mb())
         return dt
 
-    def rep(self, timed: bool, datasets=None):
-        """Every op once: the bulk ops on each dataset, then one lookup hit,
-        one lookup miss, one range scan and one pruned decode."""
+    def rep(self, timed: bool, rounds: int | None = None):
+        """The bulk ops once on each dataset, then ``rounds`` rounds of one
+        lookup hit, one lookup miss, one range scan and one pruned decode."""
         import pyarrow.parquet as pq
 
         from sparkcodec.engine import (decode_dataframe, decode_to_parquet,
-                                       encode_to_parquet, lookup_rows,
-                                       range_scan_rows)
+                                       encode_to_parquet)
 
         spark, st, spec = self.sess.spark, self.st, self.spec
+        self.n_rep += 1
         per = dict.fromkeys(BULK_OPS, 0.0)
-        for name in datasets or st.src:
-            src, tbl, keys = st.src[name], st.tables[name], SORT_KEYS[name]
+        for name in st.src:
+            src, tbl = st.src[name], st.tables[name]
             enc = os.path.join(self.work, "enc", name)
             blt = os.path.join(self.work, "builtin", name)
             dec = os.path.join(self.work, "dec", name)
@@ -376,7 +390,7 @@ class Runner:
             t["decode_write"] = self.op(
                 "decode_to_parquet",
                 lambda: decode_to_parquet(spark, enc, dec).collect(),
-                lambda _: same_rows(pq.read_table(dec), tbl, keys), on=name)
+                lambda _: same_rows(pq.read_table(dec), tbl), on=name)
             for k in BULK_OPS:
                 per[k] += t[k]
                 if timed:
@@ -384,26 +398,48 @@ class Runner:
             self.sizes[f"stored.{name}"] = dir_bytes(enc)
             self.sizes[f"builtin.{name}"] = dir_bytes(blt)
 
-        qd, src = spec.query_dataset, st.tables[spec.query_dataset]
-        qkeys = SORT_KEYS[qd]
         q_times = {k: [] for k in QUERY_OPS}
+        for _ in range(self.spec.query_rounds if rounds is None else rounds):
+            self.queries(q_times)
+
+        if timed:
+            for k in BULK_OPS:
+                self.times[k].append(per[k])
+            for k in QUERY_OPS:
+                self.times[k].extend(q_times[k])
+            self.ratios.append(per["encode"] / per["builtin"])
+
+    def lookup(self, key, hit: bool) -> float:
+        """One checked ``lookup_rows`` of ``key``; returns its time."""
+        from sparkcodec.engine import lookup_rows
+
+        spark, st, spec = self.sess.spark, self.st, self.spec
+        want = expected_rows(st.tables[spec.query_dataset], spec.key, key)
+        if hit != (want.num_rows > 0):
+            raise RuntimeError(f"lookup key {key!r} misclassified (hit={hit})")
+        return self.op(
+            "lookup_rows",
+            lambda: lookup_rows(spark.read.parquet(st.query_dir), spec.key, key).toArrow(),
+            lambda got: same_rows(got, want), on=f"{key!r}")
+
+    def queries(self, q_times: dict):
+        """One lookup hit, one lookup miss, one range scan and one pruned
+        decode on the query table, each key or range the next of its
+        seeded sequence."""
+        from sparkcodec.engine import decode_dataframe, range_scan_rows
+
+        spark, st, spec = self.sess.spark, self.st, self.spec
+        qd, src = spec.query_dataset, st.tables[spec.query_dataset]
         i, self.q = self.q % len(st.hits), self.q + 1
-        for kind, key in (("lookup_hit", st.hits[i]), ("lookup_miss", st.misses[i])):
-            want = expected_rows(src, spec.key, key)
-            if (kind == "lookup_hit") != (want.num_rows > 0):
-                raise RuntimeError(f"{kind} key {key!r} misclassified")
-            q_times[kind].append(self.op(
-                "lookup_rows",
-                lambda key=key: lookup_rows(
-                    spark.read.parquet(st.query_dir), spec.key, key).toArrow(),
-                lambda got, want=want: same_rows(got, want, qkeys), on=f"{key!r}"))
+        q_times["lookup_hit"].append(self.lookup(st.hits[i], hit=True))
+        q_times["lookup_miss"].append(self.lookup(st.misses[i], hit=False))
         lo, hi = st.ranges[i % len(st.ranges)]
         q_times["range_scan"].append(self.op(
             "range_scan_rows",
             lambda: range_scan_rows(spark.read.parquet(st.query_dir),
                                     spec.range_col, lo, hi).toArrow(),
-            lambda got: same_rows(got, expected_rows(src, spec.range_col, lo, hi),
-                                  qkeys), on=f"[{lo}, {hi}]"))
+            lambda got: same_rows(got, expected_rows(src, spec.range_col, lo, hi)),
+            on=f"[{lo}, {hi}]"))
 
         def check_pruned(got):
             if got != st.pruned_checksum:
@@ -414,20 +450,18 @@ class Runner:
                                               columns=spec.pruned), spec.pruned),
             check_pruned, on=qd))
 
-        if timed:
-            for k in BULK_OPS:
-                self.times[k].append(per[k])
-            for k in QUERY_OPS:
-                self.times[k].extend(q_times[k])
-            self.ratios.append(per["encode"] / per["builtin"])
-
     def warm_up(self):
-        """One discarded rep (bulk ops on the query dataset only)."""
-        self.rep(timed=False, datasets=[self.spec.query_dataset])
+        """One discarded rep of the bulk ops on every dataset (Spark
+        compiles a plan per schema), and one lookup: a run's first query
+        takes up to twice as long as the next, the others far less so."""
+        self.rep(timed=False, rounds=0)
+        self.lookup(self.st.hits[-1], hit=True)  # the timed keys start at 0
         if self.spark_tracer is not None:
             self.spark_tracer.reset()
 
     def loop(self, seconds: float) -> int:
+        """Timed reps until ``seconds`` have passed; the rep in flight
+        completes."""
         reps, t0, c0 = 0, time.perf_counter(), cpu_ticks()
         while reps == 0 or time.perf_counter() - t0 < seconds:
             self.rep(timed=True)
@@ -468,8 +502,7 @@ def end_to_end(r: Runner, st: State, setup_s: float) -> dict:
     return {k: {"value": m[k][0], "unit": m[k][1]} for k in END_TO_END}
 
 
-def base_record(spec: Spec, st: State, seed: int, reps: int, r: Runner,
-                setup_times: list[float]) -> dict:
+def base_record(spec: Spec, st: State, seed: int, reps: int, r: Runner) -> dict:
     """Every denominator behind the reported ratios."""
     import numpy
     import pyarrow
@@ -485,7 +518,7 @@ def base_record(spec: Spec, st: State, seed: int, reps: int, r: Runner,
         "input_layout": st.layout,
         "timed_reps": reps, "samples": {k: len(v) for k, v in r.times.items()},
         "cpu_steal_frac": r.steal_frac,
-        "bytes": r.sizes, "setup_runs_s": setup_times,
+        "bytes": r.sizes, "setup_parts_s": st.setup_parts_s,
         "lookup_hit_p90_s": hit[int(0.9 * (len(hit) - 1))] if hit else None,
         "times_s": r.times, "encode_vs_builtin_pairs": r.ratios,
         "bulk_s_by_dataset": r.by_dataset,
@@ -506,18 +539,12 @@ def run(spec: Spec, seed: int, seconds: float, trace: bool, work: str) -> dict:
             from layers import SparkOpTracer
 
             spark_tracer = SparkOpTracer(spark.sparkContext, sess.slots)
-        r = Runner(sess, spec, None, work, spark_tracer)
-        setup_times = []
-        for i in range(SETUPS):
-            t0 = time.perf_counter()
-            r.st = st = stage(spark, spec, seed, work)
-            setup_times.append(time.perf_counter() - t0)
-            if i == 0:
-                # warm up right after the first set-up, so that the later
-                # set-ups also give the JIT time before the timed reps
-                r.warm_up()
+        st = stage(spark, spec, seed, work)
+        setup_s = time.perf_counter() - t0  # session start included
+        r = Runner(sess, spec, st, work, spark_tracer)
+        r.warm_up()
         reps = r.loop(seconds)
-        base = base_record(spec, st, seed, reps, r, setup_times)
+        base = base_record(spec, st, seed, reps, r)
         base["session_start_s"] = session_s
         attempted, failed = r.attempted, r.failed
         if trace:
@@ -528,7 +555,7 @@ def run(spec: Spec, seed: int, seconds: float, trace: bool, work: str) -> dict:
             attempted, failed = attempted + ra, failed + rf
             metrics = {k: {"value": v, "unit": unit_of(k)} for k, v in m.items()}
         else:
-            metrics = end_to_end(r, st, median(setup_times))
+            metrics = end_to_end(r, st, setup_s)
         print(json.dumps({"base": base}, default=str))
         return {"correct": failed == 0, "attempted": attempted,
                 "failed": failed, "metrics": metrics}
@@ -568,6 +595,8 @@ def main(argv=None) -> int:
               file=sys.stderr)
         return 2
     work = prepare_env(root)
+    # a terminated run still stops its JVM (Session.close, in finally)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     try:
         result = run(WORKLOADS[args.workload], args.seed, args.seconds,
                      bool(args.trace), work)
