@@ -24,7 +24,7 @@ for the rebased offsets, one for the flattened values.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -1158,63 +1158,81 @@ def _encoded_out_ddl(payload_columns: tuple[str, ...] | None,
     return ENCODED_BASE_DDL + ", " + _payloads_ddl(payload_columns) + aux
 
 
-def _descriptor_df(spark, splits: list[dict], n_slices: int | None = None):
-    """(path, row_groups, skip_rows, take_rows) descriptor DataFrame --
-    the only thing the JVM ships to the scan-side workers.  skip/take
-    bound a row RANGE within the listed row groups (0/-1 = all rows); see
-    _plan_parquet_splits on when ranges appear.  ``n_slices`` spreads the
-    descriptors over that many task partitions (consecutive splits share
-    a task; its encode stream then windows across them, keeping chunks
-    full); default one task per split.
+def _map_splits(spark, splits: list[dict], n_slices: int,
+                task: Callable[[int, list[tuple]], Iterator[pa.RecordBatch]],
+                ddl: str):
+    """Run ``task(slice_index, descriptors)`` once per task slice of the
+    planned splits and return the DataFrame of its record batches
+    (``ddl``).  A descriptor is a ``(path, row_groups, skip_rows,
+    take_rows)`` tuple; skip/take bound a row RANGE within the listed row
+    groups (0/-1 = all rows), see _plan_parquet_splits on when ranges
+    appear.  ``n_slices`` (see :func:`_task_slices`) spreads the splits
+    over that many tasks: consecutive splits share a task, and its encode
+    stream then windows across them, keeping chunks full.
 
-    Built over ``parallelize(rows, n_slices)`` so descriptors land in
-    their partitions directly: the former ``repartition(n)`` added a
-    round-robin Exchange -- a whole extra stage barrier on EVERY
-    scan-side encode/decode job, shuffling rows that are already placed
-    (guide: remove shuffles outright)."""
+    The descriptors ride in the task closure, not in rows: the job is
+    ``spark.range(0, n, 1, n).mapInArrow(...)``, one id per task naming
+    its slice, so the only Python worker in a task is the ``mapInArrow``
+    one.  The pickled command carries every slice; past
+    ``spark.broadcast.UDFCompressionThreshold`` (1 MB) Spark ships it as
+    a broadcast instead of inside each task.  The former descriptor
+    DataFrame, ``createDataFrame(parallelize(rows, n), ddl)``, ran
+    ``rdd.map(schema.toInternal)`` in a second Python worker inside every
+    task ahead of the ``mapInArrow`` one -- a worker round-trip per task
+    for a handful of tuples.
+
+    Slice ``i`` of ``n`` is ``rows[i*L//n : (i+1)*L//n]`` over the ``L``
+    planned splits: the contiguous slicing ``parallelize`` used when ``n``
+    divides ``L`` or ``L <= n``.  Otherwise ``parallelize`` sliced batches
+    of ``L//n`` rows, so one task could get twice the splits of another;
+    here task sizes differ by at most one split."""
     rows = [(s["path"], s["row_groups"], s.get("skip_rows", 0),
              s.get("take_rows", -1)) for s in splits]
-    rdd = spark.sparkContext.parallelize(
-        rows, n_slices if n_slices else len(rows))
-    return spark.createDataFrame(
-        rdd, "path STRING, row_groups ARRAY<INT>, skip_rows LONG, take_rows LONG")
+    L = len(rows)
+    slices = [rows[i * L // n_slices:(i + 1) * L // n_slices]
+              for i in range(n_slices)]
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            for i in b.column(0).to_numpy():
+                yield from task(int(i), slices[i])
+
+    return spark.range(0, n_slices, 1, n_slices).mapInArrow(run, ddl)
 
 
-def _read_splits(batches, batch_rows: int, columns) -> Iterator[pa.RecordBatch]:
-    """Worker-side split reader: descriptor batches -> the record batches
-    of every (file, row-groups[, row range]) split, read locally with
-    pyarrow.  A ranged split slices [skip, skip+take) out of its row
-    groups' row sequence and stops reading as soon as the range is
-    exhausted (parquet cannot seek inside a row group, so rows before
-    ``skip`` are decoded and discarded -- the bounded price of
-    parallelizing a grossly oversized row group)."""
+def _read_splits(descs: list[tuple], batch_rows: int,
+                 columns) -> Iterator[pa.RecordBatch]:
+    """Worker-side split reader: the record batches of every
+    ``(path, row_groups, skip_rows, take_rows)`` descriptor of a task
+    slice (see :func:`_map_splits`), read locally with pyarrow.  A ranged
+    split slices [skip, skip+take) out of its row groups' row sequence and
+    stops reading as soon as the range is exhausted (parquet cannot seek
+    inside a row group, so rows before ``skip`` are decoded and discarded
+    -- the bounded price of parallelizing a grossly oversized row
+    group)."""
     import pyarrow.parquet as pq
 
-    for b in batches:
-        for p, rgs, skip, take in zip(b.column(0).to_pylist(),
-                                      b.column(1).to_pylist(),
-                                      b.column(2).to_pylist(),
-                                      b.column(3).to_pylist()):
-            pf = pq.ParquetFile(p)
-            try:
-                remaining = None if take is None or take < 0 else int(take)
-                for rb in pf.iter_batches(batch_size=batch_rows,
-                                          row_groups=rgs, columns=columns):
-                    if skip:
-                        if skip >= len(rb):
-                            skip -= len(rb)
-                            continue
-                        rb = rb.slice(skip)
-                        skip = 0
-                    if remaining is not None:
-                        if remaining <= 0:
-                            break
-                        if len(rb) > remaining:
-                            rb = rb.slice(0, remaining)
-                        remaining -= len(rb)
-                    yield rb
-            finally:
-                pf.close()
+    for p, rgs, skip, take in descs:
+        pf = pq.ParquetFile(p)
+        try:
+            remaining = None if take < 0 else take
+            for rb in pf.iter_batches(batch_size=batch_rows,
+                                      row_groups=rgs, columns=columns):
+                if skip:
+                    if skip >= len(rb):
+                        skip -= len(rb)
+                        continue
+                    rb = rb.slice(skip)
+                    skip = 0
+                if remaining is not None:
+                    if remaining <= 0:
+                        break
+                    if len(rb) > remaining:
+                        rb = rb.slice(0, remaining)
+                    remaining -= len(rb)
+                yield rb
+        finally:
+            pf.close()
 
 
 def _payloads_ddl(payload_columns: tuple[str, ...]) -> str:
@@ -1597,30 +1615,11 @@ def encode_parquet_dataset(spark, path, *,
         out_ddl += ", source_file STRING"
     if not splits:
         return spark.createDataFrame([], out_ddl)
-    desc = _descriptor_df(spark, splits, _task_slices(splits, min_splits))
 
-    def encode_split(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx is not None else 0
-
-        def read_file(p, rgs) -> Iterator[pa.RecordBatch]:
-            pf = pq.ParquetFile(p)
-            try:
-                yield from pf.iter_batches(batch_size=batch_rows,
-                                           row_groups=rgs, columns=columns)
-            finally:
-                pf.close()
-
-        def descriptors():
-            for b in batches:
-                yield from zip(b.column(0).to_pylist(), b.column(1).to_pylist())
-
+    def encode_split(part_id: int, descs: list[tuple]) -> Iterator[pa.RecordBatch]:
         if not include_source_file:
             yield from _encode_batch_stream(
-                _read_splits(batches, batch_rows, columns), part_id,
+                _read_splits(descs, batch_rows, columns), part_id,
                 chunk_rows, token_budget, compress, None, bloom_columns,
                 stat_columns=stat_columns, agg_columns=agg_columns,
                 payload_columns=payload_columns, ndv_columns=ndv_columns,
@@ -1630,21 +1629,22 @@ def encode_parquet_dataset(spark, path, *,
         # file-tagged mode: one encode stream per file so chunks never
         # span files; chunk_seq stays unique within the task
         seq = 0
-        for p, rgs in descriptors():
-            for rb in _encode_batch_stream(read_file(p, rgs), part_id,
-                                           chunk_rows, token_budget, compress,
-                                           None, bloom_columns, seq_start=seq,
+        for d in descs:
+            for rb in _encode_batch_stream(_read_splits([d], batch_rows, columns),
+                                           part_id, chunk_rows, token_budget,
+                                           compress, None, bloom_columns,
+                                           seq_start=seq,
                                            stat_columns=stat_columns,
                                            agg_columns=agg_columns,
                                            payload_columns=payload_columns,
                                            ndv_columns=ndv_columns,
                                            hist_columns=hist_columns):
                 seq += len(rb)
-                tagged = rb.append_column(
-                    "source_file", pa.array([p] * len(rb), type=pa.string()))
-                yield tagged
+                yield rb.append_column(
+                    "source_file", pa.array([d[0]] * len(rb), type=pa.string()))
 
-    return desc.mapInArrow(encode_split, out_ddl)
+    return _map_splits(spark, splits, _task_slices(splits, min_splits),
+                       encode_split, out_ddl)
 
 
 def _sweep_stale_parts(out_dir: str) -> None:
@@ -1720,16 +1720,11 @@ def encode_to_parquet(spark, path, out_dir: str, *,
                            read_columns=columns)
     if split_payload:
         payload_columns, columns = _resolve_split_columns(columns, ds_schema.names)
-    desc = _descriptor_df(spark, splits, _task_slices(splits, min_splits))
 
-    def encode_split(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def encode_split(pid: int, descs: list[tuple]) -> Iterator[pa.RecordBatch]:
         import uuid
 
         import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
 
         writer = None
         n_chunks = 0
@@ -1743,7 +1738,7 @@ def encode_to_parquet(spark, path, out_dir: str, *,
         tmp_path = f"{fpath}.{uuid.uuid4().hex[:8]}.tmp"
         try:
             for rb in _encode_batch_stream(
-                    _read_splits(batches, batch_rows, columns), pid,
+                    _read_splits(descs, batch_rows, columns), pid,
                     chunk_rows, token_budget, compress, None, bloom_columns,
                     stat_columns=stat_columns,
                     payload_columns=payload_columns):
@@ -1773,7 +1768,8 @@ def encode_to_parquet(spark, path, out_dir: str, *,
                 ("bytes_in", pa.int64()), ("bytes_out", pa.int64()),
             ]))
 
-    return desc.mapInArrow(encode_split, manifest_ddl)
+    return _map_splits(spark, splits, _task_slices(splits, min_splits),
+                       encode_split, manifest_ddl)
 
 
 def _probe_hash(value, ts_unit: str = "us") -> np.ndarray:
@@ -2234,7 +2230,6 @@ def decode_to_parquet(spark, enc_path: str, out_dir: str, *,
     splits = _plan_parquet_splits(enc_path, n_splits, allow_ranges=False)
     if not splits:
         return spark.createDataFrame([], "path STRING, n_rows LONG, n_bytes LONG")
-    desc = _descriptor_df(spark, splits, _task_slices(splits, min_splits))
     col_set = set(columns) if columns is not None else None
 
     import pyarrow.dataset as _ds
@@ -2271,16 +2266,13 @@ def decode_to_parquet(spark, enc_path: str, out_dir: str, *,
     manifest_schema = pa.schema([("path", pa.string()), ("n_rows", pa.int64()),
                                  ("n_bytes", pa.int64())])
 
-    def decode_split(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def decode_split(pid: int, descs: list[tuple]) -> Iterator[pa.RecordBatch]:
         import uuid
 
         import pyarrow.parquet as pq
-        from pyspark import TaskContext
 
         from .parquet.writer import ParquetWriter
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
         state = {"writer": None, "n_rows": 0, "arrow_bytes": 0,
                  "file_idx": 0, "schema": None}
 
@@ -2305,46 +2297,45 @@ def decode_to_parquet(spark, enc_path: str, out_dir: str, *,
                          file_idx=state["file_idx"] + 1)
             return pa.RecordBatch.from_pylist([row], schema=manifest_schema)
 
-        for b in batches:
-            for p, rgs in zip(b.column(0).to_pylist(), b.column(1).to_pylist()):
-                pf = pq.ParquetFile(p)
-                try:
-                    for enc_b in pf.iter_batches(batch_size=64, row_groups=rgs,
-                                                 columns=read_cols):
-                        schemas = enc_b.column(0)
+        for p, rgs, _, _ in descs:
+            pf = pq.ParquetFile(p)
+            try:
+                for enc_b in pf.iter_batches(batch_size=64, row_groups=rgs,
+                                             columns=read_cols):
+                    schemas = enc_b.column(0)
+                    if split_layout:
+                        cells = [_binary_cells(enc_b.column(j))
+                                 for j in range(1, enc_b.num_columns)]
+                        payloads = None
+                    else:
+                        payloads = _binary_cells(enc_b.column(1))
+                    for i in range(len(enc_b)):
                         if split_layout:
-                            cells = [_binary_cells(enc_b.column(j))
-                                     for j in range(1, enc_b.num_columns)]
-                            payloads = None
+                            rb = _decode_split_row(enc_b, cells, i)
                         else:
-                            payloads = _binary_cells(enc_b.column(1))
-                        for i in range(len(enc_b)):
-                            if split_layout:
-                                rb = _decode_split_row(enc_b, cells, i)
-                            else:
-                                pairs = json.loads(schemas[i].as_py())
-                                rb = decode_chunk_group(payloads[i], pairs, col_set)
-                            if state["schema"] is None:
-                                state["schema"] = rb.schema
-                            elif not rb.schema.equals(state["schema"]):
-                                raise ValueError(
-                                    "mixed encoded schemas in one dataset: "
-                                    f"chunk in {p!r} decodes to {rb.schema!r} "
-                                    f"but this writer was opened with "
-                                    f"{state['schema']!r}; decode each "
-                                    "encode's output directory separately")
-                            if state["writer"] is None:
-                                state["writer"] = ParquetWriter(
-                                    rb.schema, compression=compression,
-                                    row_group_rows=row_group_rows)
-                            state["writer"].write(pa.Table.from_batches([rb]))
-                            state["n_rows"] += len(rb)
-                            state["arrow_bytes"] += sum(
-                                c.nbytes for c in rb.columns)
-                            if state["arrow_bytes"] >= target_file_bytes:
-                                yield flush()
-                finally:
-                    pf.close()
+                            pairs = json.loads(schemas[i].as_py())
+                            rb = decode_chunk_group(payloads[i], pairs, col_set)
+                        if state["schema"] is None:
+                            state["schema"] = rb.schema
+                        elif not rb.schema.equals(state["schema"]):
+                            raise ValueError(
+                                "mixed encoded schemas in one dataset: "
+                                f"chunk in {p!r} decodes to {rb.schema!r} "
+                                f"but this writer was opened with "
+                                f"{state['schema']!r}; decode each "
+                                "encode's output directory separately")
+                        if state["writer"] is None:
+                            state["writer"] = ParquetWriter(
+                                rb.schema, compression=compression,
+                                row_group_rows=row_group_rows)
+                        state["writer"].write(pa.Table.from_batches([rb]))
+                        state["n_rows"] += len(rb)
+                        state["arrow_bytes"] += sum(
+                            c.nbytes for c in rb.columns)
+                        if state["arrow_bytes"] >= target_file_bytes:
+                            yield flush()
+            finally:
+                pf.close()
         if state["writer"] is not None:
             yield flush()
         # a previous run into this dir may have rolled MORE files for this
@@ -2361,7 +2352,8 @@ def decode_to_parquet(spark, enc_path: str, out_dir: str, *,
             if m and int(m.group(1)) >= state["file_idx"]:
                 os.remove(stale)
 
-    return desc.mapInArrow(decode_split, "path STRING, n_rows LONG, n_bytes LONG")
+    return _map_splits(spark, splits, _task_slices(splits, min_splits),
+                       decode_split, "path STRING, n_rows LONG, n_bytes LONG")
 
 
 def _schema_pairs(enc_df) -> list[list[str]]:
@@ -2518,7 +2510,10 @@ def _binary_cells(arr) -> list:
     width = 8 if pa.types.is_large_binary(t) else 4
     off = np.frombuffer(bufs[1], dtype=f"<i{width}", count=n + 1,
                         offset=arr.offset * width)
-    data = memoryview(bufs[2]) if bufs[2] is not None else memoryview(b"")
+    # cast("B"): a pyarrow Buffer's memoryview has format "b" (signed), so
+    # decoders indexing single bytes (FSST's symbol count) would read >= 128
+    # as negative
+    data = memoryview(bufs[2]).cast("B") if bufs[2] is not None else memoryview(b"")
     if arr.null_count:
         valid = np.asarray(arr.is_valid())
         return [data[off[i]:off[i + 1]] if valid[i] else None

@@ -35,8 +35,14 @@ MINIBLOCKS = 4
 MB_VALUES = BLOCK // MINIBLOCKS  # 32
 
 
-def delta_binary_pack(values: np.ndarray) -> bytes:
-    v = np.ascontiguousarray(values, dtype=np.int64)
+def delta_binary_pack(values: np.ndarray, bits: int = 64) -> bytes:
+    """DELTA_BINARY_PACKED stream of ``values`` at physical width ``bits``
+    (64, or 32 for parquet INT32 columns).  Deltas, block minimums and
+    adjusted deltas wrap at that width, as in parquet-mr: an INT32 column
+    whose deltas span more than 32 bits (0, -2**31, 1) still packs into
+    miniblocks of at most 32 bits, the widest an INT32 reader accepts."""
+    sdt, udt = (np.int32, np.uint32) if bits == 32 else (np.int64, np.uint64)
+    v = np.ascontiguousarray(values, dtype=sdt)
     n = len(v)
     out = bytearray()
     write_uvarint(out, BLOCK)
@@ -52,16 +58,16 @@ def delta_binary_pack(values: np.ndarray) -> bytes:
     m = len(deltas)
     nblocks = (m + BLOCK - 1) // BLOCK
 
-    padded = np.zeros(nblocks * BLOCK, dtype=np.int64)
+    padded = np.zeros(nblocks * BLOCK, dtype=sdt)
     padded[:m] = deltas
     pb = padded.reshape(nblocks, BLOCK)
     # block min over valid deltas only (padding must not widen/narrow the frame)
     pb_for_min = padded.copy()
-    pb_for_min[m:] = np.iinfo(np.int64).max
+    pb_for_min[m:] = np.iinfo(sdt).max
     mins = pb_for_min.reshape(nblocks, BLOCK).min(axis=1)
 
     with np.errstate(over="ignore"):
-        adjusted = (pb - mins[:, None]).view(np.uint64)
+        adjusted = (pb - mins[:, None]).view(udt).astype(np.uint64, copy=False)
     adjusted.reshape(-1)[m:] = 0  # padding packs as zeros
 
     mb = adjusted.reshape(nblocks, MINIBLOCKS, MB_VALUES)

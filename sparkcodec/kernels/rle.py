@@ -147,7 +147,7 @@ def _rle_hybrid_encode_runs(v: np.ndarray, bw: int, vbytes: int,
     vals = v[rs]
     vdst = (off + bp_hlen + bp_plen + rle_hlen)[:, None] + np.arange(vbytes)
     vsrc = np.zeros((len(rs), 8), dtype=np.uint8)
-    vsrc[:] = vals[:, None].view(np.uint8).reshape(len(rs), 8)
+    vsrc[:] = vals.astype("<u8", copy=False).view(np.uint8).reshape(len(rs), 8)
     body[vdst.reshape(-1)] = vsrc[:, :vbytes].reshape(-1)
     # bit-packed span payloads: gather all span values, pack once, slice
     total_c = int(c.sum())

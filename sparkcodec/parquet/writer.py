@@ -362,7 +362,7 @@ def _encode_values(values: pa.Array, phys: int, encoding: int,
         dt = {PT_INT32: "int32", PT_INT64: "int64", PT_FLOAT: "float32", PT_DOUBLE: "float64"}[phys]
         return plain_encode_numeric(np_vals, dt)
     if encoding == ENC_DELTA_BP:
-        return delta_binary_pack(np_vals.astype(np.int64))
+        return delta_binary_pack(np_vals, bits=32 if phys == PT_INT32 else 64)
     if encoding == ENC_BSS:
         return byte_stream_split_encode(np_vals, np_vals.dtype.itemsize)
     raise ValueError(f"bad numeric encoding {encoding}")

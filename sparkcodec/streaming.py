@@ -234,16 +234,7 @@ def run_windowed_ingest_stats(spark, rows_df, *, window: str = "1 hour",
     sentinel = spark.createDataFrame(
         [(far, "__sentinel__", 0)], rows_df.schema)
     sentinel.coalesce(1).write.mode("append").parquet(src)
-    # the file source orders batches by modification time: pin the
-    # sentinel's mtime strictly AFTER every corpus file so a coarse-mtime
-    # filesystem tie can never process the sentinel first (which would
-    # advance the watermark past the corpus and drop every event as late)
-    corpus_mtime = max(os.path.getmtime(os.path.join(src, f))
-                       for f in corpus_files)
-    for f in os.listdir(src):
-        if f.endswith(".parquet") and f not in corpus_files:
-            os.utime(os.path.join(src, f),
-                     (corpus_mtime + 10, corpus_mtime + 10))
+    _pin_after_corpus(src, corpus_files)
 
     stream = (spark.readStream.schema(rows_df.schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
@@ -364,6 +355,24 @@ def run_source_totals(spark, rows_df, *, split_expr: str,
             .groupBy("source")
             .agg(F.max("n_docs").alias("n_docs"),
                  F.max("n_tokens").alias("n_tokens")))
+
+
+def _pin_after_corpus(src: str, corpus_files: set[str]) -> None:
+    """Set every parquet file in ``src`` outside ``corpus_files`` (the
+    sentinel) to an mtime strictly AFTER every corpus file.  The file
+    source orders batches by modification time, so a coarse-mtime
+    filesystem tie could otherwise process the sentinel first, advance
+    the watermark past the corpus and drop every event as late.  A
+    corpus write that left no parquet file (a writer emitting only
+    ``_SUCCESS`` for an empty frame) has nothing to order against."""
+    if not corpus_files:
+        return
+    corpus_mtime = max(os.path.getmtime(os.path.join(src, f))
+                       for f in corpus_files)
+    for f in os.listdir(src):
+        if f.endswith(".parquet") and f not in corpus_files:
+            os.utime(os.path.join(src, f),
+                     (corpus_mtime + 10, corpus_mtime + 10))
 
 
 def _cleanup_staging(tmp_dir, *paths) -> None:

@@ -4,6 +4,7 @@ profitability on repetitive text."""
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from sparkcodec.kernels.fsst import (
@@ -88,3 +89,47 @@ def test_symbol_table_serialization():
     buf = t.serialize()
     t2, pos = SymbolTable.deserialize(memoryview(buf), 0)
     assert t2.symbols == t.symbols and pos == len(buf)
+
+
+_SALAD = np.array(
+    "spark column vector batch scan sort hash join filter value table part "
+    "line order customer query agg group stream fast slow small key index "
+    "page chunk codec encode decode bloom range token".split())
+
+
+def _word_salad(seed: int, n_rows: int = 2000) -> pa.Array:
+    """Zipf word salad over 32 words: FSST trains >= 128 symbols on it."""
+    r = np.random.default_rng(seed)
+    n_words = r.integers(10, 120, size=n_rows)
+    words = _SALAD[r.zipf(1.3, size=int(n_words.sum())) % len(_SALAD)]
+    ends = np.cumsum(n_words)
+    return pa.array([" ".join(words[e - k:e]) for e, k in zip(ends, n_words)])
+
+
+@pytest.mark.parametrize("seed", [2, 3, 4, 5])
+def test_fsst_cell_over_arrow_buffer_roundtrips(seed):
+    """Payload cells are memoryviews over Arrow buffers; a symbol count
+    >= 128 must not read as a negative signed byte."""
+    from sparkcodec.engine import (
+        _binary_cells, _decode_any_column, _encode_any_column,
+    )
+
+    text = _word_salad(seed)
+    buf, meta = _encode_any_column(text, compress=False)
+    assert meta["codec"] == "FSST"
+    cell = _binary_cells(pa.array([buf], pa.binary()))[0]
+    assert _decode_any_column(cell, pa.string()).equals(text)
+
+
+def test_decode_to_parquet_uncompressed_fsst_text(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    from sparkcodec.engine import decode_to_parquet, encode_to_parquet
+
+    text = _word_salad(2)
+    src = str(tmp_path / "docs.parquet")
+    pq.write_table(pa.table({"doc_id": np.arange(len(text)), "text": text}), src)
+    encode_to_parquet(spark, src, str(tmp_path / "enc"), compress=False).collect()
+    decode_to_parquet(spark, str(tmp_path / "enc"), str(tmp_path / "dec")).collect()
+    back = pq.read_table(str(tmp_path / "dec")).sort_by("doc_id")
+    assert back.column("text").to_pylist() == text.to_pylist()

@@ -796,3 +796,18 @@ def test_forced_dictionary_on_floats_bit_exact():
     md = pq.ParquetFile(io.BytesIO(buf)).metadata
     for c in range(3):
         assert "RLE_DICTIONARY" in md.row_group(0).column(c).encodings
+
+
+def test_int32_delta_wraps_at_32_bits():
+    """DELTA_BINARY_PACKED on INT32 wraps deltas at 32 bits, as parquet-mr
+    does: deltas spanning more than 32 bits (0 -> -2**31 -> 1) used to be
+    packed in 33-bit miniblocks, which INT32 readers refuse."""
+    t = pa.table({"c1": pa.array([0, 2, -1, 0, 0, 0, -2**31, 1], pa.int32())})
+    assert pq.read_table(io.BytesIO(write_parquet_bytes(t))).equals(t)
+    lo, hi = -2**31, 2**31 - 1
+    ext = pa.table({"i32": pa.array(
+        np.tile([lo, hi, 0, hi, lo, -1, 7], 300).astype(np.int32))})
+    buf = write_parquet_bytes(ext, column_encodings={"i32": "DELTA_BINARY_PACKED"})
+    assert "DELTA_BINARY_PACKED" in \
+        pq.ParquetFile(io.BytesIO(buf)).metadata.row_group(0).column(0).encodings
+    _assert_equal(buf, ext)

@@ -256,3 +256,162 @@ def test_rank_decode_int32_exact():
     back = decode_array(blob)
     assert back.type == pa.int32()
     assert np.array_equal(back.to_numpy(), toks)
+
+
+# ---------- task driving: spark.range ids, descriptors in the closure ----------
+
+_DESC_DDL = "task LONG, path STRING, rgs ARRAY<INT>, skip LONG, take LONG"
+
+
+def _ids_file(path, lo: int, n: int, rg_rows: int) -> None:
+    import pyarrow.parquet as pq
+
+    ids = np.arange(lo, lo + n, dtype=np.int64)
+    pq.write_table(pa.table({"id": ids, "v": ids * 3}), path,
+                   row_group_size=rg_rows)
+
+
+def _split_inputs(tmp_path, case: str):
+    """(path, planned splits, task slices) for one split-planning case."""
+    from sparkcodec.engine import _plan_parquet_splits, _task_slices
+
+    if case == "ranged":  # one 200k-row row group -> skip/take ranges
+        path = str(tmp_path / "one_rg.parquet")
+        _ids_file(path, 0, 200_000, 200_000)
+        splits = _plan_parquet_splits(path, 8)
+        assert len(splits) > 1 and all("skip_rows" in s for s in splits)
+        return path, splits, _task_slices(splits, 4)
+    sizes = [3000, 7000, 1000, 5000, 4000]
+    path, lo = [], 0
+    for k, n in enumerate(sizes):
+        path.append(str(tmp_path / f"in-{k}.parquet"))
+        _ids_file(path[-1], lo, n, 1000)
+        lo += n
+    splits = _plan_parquet_splits(path, 6)
+    # "pinned": n_splits given -> one task per split
+    return path, splits, _task_slices(splits, None if case == "pinned" else 4)
+
+
+@pytest.mark.parametrize("case", ["ranged", "multi_file", "pinned"])
+def test_map_splits_reads_every_split_once(spark, tmp_path, case):
+    """Each planned split reaches exactly one task, tasks hold contiguous
+    runs of the plan in order, and the task count is the slice count."""
+    from sparkcodec.engine import _map_splits
+
+    _, splits, n_slices = _split_inputs(tmp_path, case)
+    planned = [(s["path"], s["row_groups"], s.get("skip_rows", 0),
+                s.get("take_rows", -1)) for s in splits]
+
+    def task(i, descs):
+        yield pa.RecordBatch.from_pylist(
+            [{"task": i, "path": p, "rgs": rgs, "skip": skip, "take": take}
+             for p, rgs, skip, take in descs],
+            schema=pa.schema([("task", pa.int64()), ("path", pa.string()),
+                              ("rgs", pa.list_(pa.int32())),
+                              ("skip", pa.int64()), ("take", pa.int64())]))
+
+    if case == "pinned":
+        assert n_slices == len(splits)
+    df = _map_splits(spark, splits, n_slices, task, _DESC_DDL)
+    assert df.rdd.getNumPartitions() == n_slices
+    got = [tuple(r) for r in df.collect()]
+    assert [(p, list(g), s, t) for _, p, g, s, t in got] == planned
+    tasks = [r[0] for r in got]
+    assert tasks == sorted(tasks)
+    per_task = np.bincount(tasks, minlength=n_slices)
+    assert per_task.max() - per_task.min() <= 1
+
+
+@pytest.mark.parametrize("case", ["ranged", "multi_file", "pinned"])
+def test_scan_encode_covers_every_row_once(spark, tmp_path, case):
+    from sparkcodec.engine import decode_dataframe, encode_parquet_dataset
+
+    path, _, _ = _split_inputs(tmp_path, case)
+    enc = encode_parquet_dataset(
+        spark, path, n_splits=6 if case == "pinned" else None)
+    ids = np.sort(np.array([r["id"] for r in decode_dataframe(enc).collect()]))
+    assert np.array_equal(ids, np.arange(200_000 if case == "ranged" else 20_000))
+
+
+def test_scan_encode_source_file_tags_each_file_once(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    from sparkcodec.engine import decode_dataframe, encode_parquet_dataset
+
+    paths, _, _ = _split_inputs(tmp_path, "multi_file")
+    enc = encode_parquet_dataset(spark, paths, include_source_file=True)
+    for p in paths:
+        part = enc.filter(enc.source_file == p).drop("source_file")
+        ids = sorted(r["id"] for r in decode_dataframe(part).collect())
+        assert ids == pq.read_table(p).column("id").to_pylist()
+
+
+def test_encode_to_parquet_matches_parallelize_placement(spark, tmp_path):
+    """For a fixed input the container equals what the former descriptor
+    DataFrame produced: the splits are placed on tasks as
+    ``parallelize(rows, n)`` placed them, and each task's encode stream
+    windows across its splits exactly as before (chunk_rows spans two
+    splits here), so manifests and payload bytes match."""
+    import pyarrow.parquet as pq
+
+    from sparkcodec.engine import (
+        DEFAULT_TOKEN_BUDGET, _encode_batch_stream, _plan_parquet_splits,
+        _read_splits, _task_slices, encode_to_parquet,
+    )
+
+    rng = np.random.default_rng(4)
+    n = 16 * 3000
+    lens = rng.integers(1, 40, n)
+    toks = (rng.zipf(1.3, int(lens.sum())) % 5000).astype(np.int32)
+    offs = np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
+    src = str(tmp_path / "in.parquet")
+    pq.write_table(pa.table({
+        "id": np.arange(n, dtype=np.int64),
+        "toks": pa.ListArray.from_arrays(pa.array(offs), pa.array(toks))}),
+        src, row_group_size=3000)
+    min_splits = max(spark.sparkContext.defaultParallelism, 2)
+    splits = _plan_parquet_splits(src, min_splits * 2)
+    n_slices = _task_slices(splits, min_splits)
+    assert len(splits) > n_slices  # tasks hold several splits
+    rows = [(s["path"], s["row_groups"], s.get("skip_rows", 0),
+             s.get("take_rows", -1)) for s in splits]
+    placed = spark.sparkContext.parallelize(rows, n_slices).glom().collect()
+
+    chunk_rows = 5000
+    out = tmp_path / "enc"
+    manifest = {r["path"]: r for r in
+                encode_to_parquet(spark, src, str(out),
+                                  chunk_rows=chunk_rows).collect()}
+    assert len(manifest) == n_slices
+    keep = ["part_id", "chunk_seq", "chunk_id", "n_rows", "n_tokens",
+            "bytes_in", "bytes_out", "schema_json", "payload"]
+    for pid, descs in enumerate(placed):
+        want = pa.Table.from_batches(list(_encode_batch_stream(
+            _read_splits(descs, 16384, None), pid, chunk_rows,
+            DEFAULT_TOKEN_BUDGET, True, None, ())))
+        fpath = str(out / f"part-{pid:05d}.parquet")
+        assert pq.read_table(fpath).select(keep).equals(want.select(keep))
+        assert manifest[fpath]["n_chunks"] == want.num_rows
+        assert manifest[fpath]["bytes_out"] == pa.compute.sum(
+            want["bytes_out"]).as_py()
+
+
+def test_scan_side_plans_have_no_rdd_scan(spark, tmp_path):
+    """Scan-side jobs start from a Range, not a Python-RDD descriptor scan
+    (whose rows cost every task a second Python worker)."""
+    from sparkcodec.engine import (
+        decode_to_parquet, encode_dataframe, encode_parquet_dataset,
+        encode_to_parquet,
+    )
+
+    src = str(tmp_path / "in.parquet")
+    _ids_file(src, 0, 5000, 1000)
+    enc_dir = str(tmp_path / "enc")
+    encode_to_parquet(spark, src, enc_dir).collect()
+    for df in (encode_parquet_dataset(spark, src),
+               encode_dataframe(spark.read.parquet(src)),
+               encode_to_parquet(spark, src, str(tmp_path / "enc2")),
+               decode_to_parquet(spark, enc_dir, str(tmp_path / "dec"))):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "Range" in plan, plan
+        assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan

@@ -277,3 +277,22 @@ def test_run_source_totals_matches_batch(spark, tmp_path):
                .agg(F.count(F.lit(1)).alias("n_docs"),
                     F.sum("n_tok").alias("n_tokens")).collect())
     assert a == b and len(a) == 3
+
+
+def test_pin_after_corpus_tolerates_no_corpus_file(tmp_path):
+    """A corpus write that left no parquet file has nothing to order the
+    sentinel against; with corpus files the sentinel is pinned after them."""
+    import os
+    import time
+
+    from sparkcodec.streaming import _pin_after_corpus
+
+    sentinel = tmp_path / "part-s.parquet"
+    sentinel.write_bytes(b"s")
+    _pin_after_corpus(str(tmp_path), set())
+    corpus = tmp_path / "part-c.parquet"
+    corpus.write_bytes(b"c")
+    later = time.time() + 1000
+    os.utime(corpus, (later, later))
+    _pin_after_corpus(str(tmp_path), {corpus.name})
+    assert os.path.getmtime(sentinel) > os.path.getmtime(corpus)
