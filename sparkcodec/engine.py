@@ -15,10 +15,20 @@ The dataflow (SURVEY.md §7.0):
 
 A chunk group is the analog of the reference's row group (reference:
 src/parquet-writer.js:63-144): all column chunks for a window of rows,
-serialized into one self-describing blob with a tiny footer-style JSON
-metadata row alongside.  List columns (the `tokens` payload) collapse the
-Dremel machinery to Arrow offset arithmetic (SURVEY.md §1.4): one chunk
-for the rebased offsets, one for the flattened values.
+with a tiny footer-style JSON metadata row alongside.  List columns (the
+`tokens` payload) collapse the Dremel machinery to Arrow offset
+arithmetic (SURVEY.md §1.4): one chunk for the rebased offsets, one for
+the flattened values.
+
+Every encode produces one cell (encoded bytes) per column per chunk group.
+The two payload layouts differ only in where those cells sit: behind one
+header in a self-describing ``payload`` blob (the default), or in one
+``payload_<col>`` BINARY column each (``split_payload=True``).  On the
+read side one function maps an encoded row to ``{column: cell}``
+(:func:`_row_cells`), and every reader -- :func:`decode_dataframe`,
+:func:`decode_to_parquet`, :func:`apply_deletes` and the blob bloom probe
+-- loops over it and decodes through one per-row step
+(:func:`_decode_cells`).
 """
 
 from __future__ import annotations
@@ -45,8 +55,6 @@ ENCODED_BASE_DDL = (
     "n_tokens LONG, bytes_in LONG, bytes_out LONG, encode_ms DOUBLE, "
     "schema_json STRING, meta_json STRING"
 )
-ENCODED_DDL = ENCODED_BASE_DDL + ", payload BINARY"
-
 ENCODED_PA_SCHEMA = pa.schema([
     ("part_id", pa.int32()), ("bucket", pa.int32()), ("chunk_seq", pa.int32()),
     ("chunk_id", pa.int64()), ("n_rows", pa.int64()), ("n_tokens", pa.int64()),
@@ -578,6 +586,22 @@ def _encode_group_columns(batch: pa.Table | pa.RecordBatch, compress: bool,
     return cols, metas, pairs, n_tokens
 
 
+def _group_blob(n_rows: int, cols: list[tuple[str, bytes, bytes]]) -> bytes:
+    """The single-blob layout of one chunk row: a header, then each
+    column's (name, bloom, cell) section -- the same cells the per-column
+    layout stores as ``payload_<col>``."""
+    out = bytearray()
+    out.extend(GROUP_MAGIC)
+    out.append(GROUP_VERSION)
+    write_uvarint(out, n_rows)
+    write_uvarint(out, len(cols))
+    for name, blob, bloom_bytes in cols:
+        for section in (name.encode(), bloom_bytes, blob):
+            write_uvarint(out, len(section))
+            out.extend(section)
+    return bytes(out)
+
+
 def encode_chunk_group(batch: pa.Table | pa.RecordBatch, compress: bool = True,
                        bloom_columns: tuple[str, ...] = (),
                        bloom_sink: dict[str, bytes] | None = None,
@@ -585,6 +609,11 @@ def encode_chunk_group(batch: pa.Table | pa.RecordBatch, compress: bool = True,
                        ndv_sink: dict[str, bytes] | None = None) -> tuple[bytes, dict, list[list[str]], int]:
     """Encode all columns of a row window into ONE self-describing group
     blob.  Returns (blob, per-column meta, schema pairs, n_tokens).
+
+    The blob is the single-blob layout of the per-column cells every
+    encode produces (:func:`_encode_group_columns`); ``split_payload=True``
+    on the encode entry points stores the same cells as one
+    ``payload_<col>`` BINARY column each instead.
 
     ``bloom_columns`` opt in per-column split-block bloom filters stored in
     the group blob (reference analog: per-chunk bloom, src/bloom.js), used
@@ -594,27 +623,62 @@ def encode_chunk_group(batch: pa.Table | pa.RecordBatch, compress: bool = True,
     dedicated top-level columns -- the IO-prunable probe path
     (:func:`filter_chunks_may_contain` reads those kilobyte columns and
     never scans ``payload``).
-
-    For the per-column payload layout (one ``payload_<col>`` BINARY column
-    per source column, parquet-reader column pruning) see
-    ``split_payload=True`` on the encode entry points.
     """
     cols, metas, pairs, n_tokens = _encode_group_columns(
         batch, compress, bloom_columns, bloom_sink, ndv_columns, ndv_sink)
-    out = bytearray()
-    out.extend(GROUP_MAGIC)
-    out.append(GROUP_VERSION)
-    write_uvarint(out, len(batch))
-    write_uvarint(out, len(cols))
-    for name, blob, bloom_bytes in cols:
-        nb = name.encode()
-        write_uvarint(out, len(nb))
-        out.extend(nb)
-        write_uvarint(out, len(bloom_bytes))
-        out.extend(bloom_bytes)
-        write_uvarint(out, len(blob))
-        out.extend(blob)
-    return bytes(out), metas, pairs, n_tokens
+    return _group_blob(len(batch), cols), metas, pairs, n_tokens
+
+
+def _group_sections(blob) -> tuple[int, dict, dict]:
+    """The one chunk-group header walk: ``(n_rows, cells, blooms)``, with
+    each column's encoded cell and its non-empty bloom section as
+    zero-copy views.  A bad magic, an unknown version, a section running
+    past the end and bytes after the last section raise ValueError."""
+    mv = memoryview(blob)
+    if bytes(mv[:4]) != GROUP_MAGIC:
+        raise ValueError("bad chunk-group magic")
+    version = mv[4] if len(mv) > 4 else None
+    if version not in (1, 2):
+        raise ValueError(f"unsupported chunk-group version {version}")
+    pos = 5
+
+    def section():
+        nonlocal pos
+        n, pos = read_uvarint(mv, pos)
+        if pos + n > len(mv):
+            raise ValueError("truncated chunk group: a section runs past "
+                             "the end of the blob")
+        pos += n
+        return mv[pos - n:pos]
+
+    cells: dict[str, memoryview] = {}
+    blooms: dict[str, memoryview] = {}
+    try:
+        n_rows, pos = read_uvarint(mv, pos)
+        n_cols, pos = read_uvarint(mv, pos)
+        for _ in range(n_cols):
+            name = bytes(section()).decode()
+            bloom = section() if version >= 2 else None
+            cells[name] = section()
+            if bloom:
+                blooms[name] = bloom
+    except IndexError:
+        raise ValueError("truncated chunk-group header") from None
+    if pos != len(mv):
+        raise ValueError(f"{len(mv) - pos} bytes trail the last chunk-group "
+                         "section")
+    return n_rows, cells, blooms
+
+
+def _bloom_admits(bloom, hashes, require_all: bool) -> bool:
+    """A bloom's verdict on the probe ``hashes``: admits ANY (or, with
+    ``require_all``, EVERY) of them.  No bloom admits everything."""
+    if not bloom:
+        return True
+    from .kernels.bloom import SplitBlockBloom
+
+    hits = SplitBlockBloom.from_bytes(bytes(bloom)).might_contain(hashes)
+    return bool(hits.all() if require_all else hits.any())
 
 
 def group_may_contain(blob, column: str, value, ts_unit: str = "us") -> bool:
@@ -631,33 +695,29 @@ def group_may_contain_hashes(blob, column: str, hashes,
     ONE SplitBlockBloom parse per blob regardless of how many probe
     hashes are tested (the IN-list path).  ``require_all`` flips the
     verdict to "admits EVERY hash" (the contains-all pruning shape)."""
-    from .kernels.bloom import SplitBlockBloom
+    _, _, blooms = _group_sections(blob)
+    return _bloom_admits(blooms.get(column), hashes, require_all)
 
-    mv = memoryview(blob)
-    if bytes(mv[:4]) != GROUP_MAGIC:
-        raise ValueError("bad chunk-group magic")
-    version = mv[4]
-    pos = 5
-    _, pos = read_uvarint(mv, pos)
-    n_cols, pos = read_uvarint(mv, pos)
-    for _ in range(n_cols):
-        nlen, pos = read_uvarint(mv, pos)
-        name = bytes(mv[pos : pos + nlen]).decode()
-        pos += nlen
-        bloom_len = 0
-        if version >= 2:
-            bloom_len, pos = read_uvarint(mv, pos)
-            bloom_buf = mv[pos : pos + bloom_len]
-            pos += bloom_len
-        blen, pos = read_uvarint(mv, pos)
-        if name == column:
-            if bloom_len == 0:
-                return True
-            bloom = SplitBlockBloom.from_bytes(bytes(bloom_buf))
-            hits = bloom.might_contain(hashes)
-            return bool(hits.all() if require_all else hits.any())
-        pos += blen
-    return True
+
+def _decode_cells(types: dict, cells: dict, n_rows: int,
+                  names: list[str] | None = None,
+                  del_mask=None) -> pa.RecordBatch:
+    """The per-row decode step of every reader: decode the ``names`` cells
+    of one chunk row (None = all, in stored order), check each column
+    holds ``n_rows`` values, and drop the rows a ``del_mask`` bitmap marks
+    deleted."""
+    names = list(cells) if names is None else names
+    arrays = []
+    for name in names:
+        arr = _decode_any_column(cells[name], _type_from_name(types[name]))
+        if len(arr) != n_rows:
+            raise ValueError(f"column {name!r} decodes to {len(arr)} rows "
+                             f"but its chunk holds {n_rows}")
+        arrays.append(arr)
+    rb = pa.RecordBatch.from_arrays(arrays, names=names)
+    if del_mask is not None:
+        rb = rb.filter(pa.array(~_decode_delete_mask(del_mask, n_rows)))
+    return rb
 
 
 def decode_chunk_group(blob, pairs: list[list[str]],
@@ -665,33 +725,66 @@ def decode_chunk_group(blob, pairs: list[list[str]],
     """Decode a chunk-group blob.  ``columns`` prunes decoding to the named
     columns -- the payload bytes of other columns are skipped entirely
     (column pruning inside the chunk, no wasted decompression)."""
-    mv = memoryview(blob)
-    if bytes(mv[:4]) != GROUP_MAGIC:
-        raise ValueError("bad chunk-group magic")
-    version = mv[4]
-    pos = 5
-    n_rows, pos = read_uvarint(mv, pos)
-    n_cols, pos = read_uvarint(mv, pos)
-    types = dict(pairs)
-    arrays = []
-    names = []
-    for _ in range(n_cols):
-        nlen, pos = read_uvarint(mv, pos)
-        name = bytes(mv[pos : pos + nlen]).decode()
-        pos += nlen
-        if version >= 2:
-            bloom_len, pos = read_uvarint(mv, pos)
-            pos += bloom_len  # pruning-only section; not needed to decode
-        blen, pos = read_uvarint(mv, pos)
-        colbuf = mv[pos : pos + blen]
-        pos += blen
-        if columns is not None and name not in columns:
-            continue
-        target = _type_from_name(types[name])
-        arr = _decode_any_column(colbuf, target)
-        arrays.append(arr)
-        names.append(name)
-    return pa.RecordBatch.from_arrays(arrays, names=names)
+    n_rows, cells, _ = _group_sections(blob)
+    names = [n for n in cells if columns is None or n in columns]
+    return _decode_cells(dict(pairs), cells, n_rows, names)
+
+
+def _split_layout(columns) -> bool:
+    """Which payload layout an encoded table's ``columns`` hold: True for
+    one ``payload_<col>`` cell column per source column, False for the
+    single ``payload`` blob."""
+    return "payload" not in columns
+
+
+def _payload_columns(columns, names: list[str] | None = None) -> list[str]:
+    """The encoded columns to read for the cells of source columns
+    ``names`` (None = all): the ``payload`` blob, or only the named
+    ``payload_<col>`` columns -- the projection that lets the parquet
+    reader of a per-column table skip the other columns' bytes."""
+    if not _split_layout(columns):
+        return ["payload"]
+    if names is None:
+        return [c for c in columns if c.startswith("payload_")]
+    missing = [n for n in names if f"payload_{n}" not in columns]
+    if missing:
+        raise ValueError(
+            f"encoded table has no payload_<col> column for {missing}; "
+            f"available: {[c for c in columns if c.startswith('payload_')]}")
+    return [f"payload_{n}" for n in names]
+
+
+def _row_cells(b: pa.RecordBatch) -> Iterator[tuple[int, dict, dict]]:
+    """The one map from encoded rows to cells: ``(n_rows, cells, blooms)``
+    per row of ``b``, shaped like :func:`_group_sections`.  A ``payload``
+    blob goes through the header walk; ``payload_<col>`` cells are read
+    directly (their blooms, if any, are ``bloom_<col>`` columns)."""
+    names = b.schema.names
+    if not _split_layout(names):
+        for blob in _binary_cells(b.column(names.index("payload"))):
+            yield _group_sections(blob)
+        return
+    cols = {n[len("payload_"):]: _binary_cells(b.column(j))
+            for j, n in enumerate(names) if n.startswith("payload_")}
+    for i, n_rows in enumerate(b.column(names.index("n_rows")).to_pylist()):
+        yield n_rows, {c: v[i] for c, v in cols.items()}, {}
+
+
+def _decode_rows(b: pa.RecordBatch,
+                 names: list[str] | None = None) -> Iterator[pa.RecordBatch]:
+    """Decode the live rows of every encoded row in ``b`` (``schema_json``,
+    ``n_rows``, the payload cells, and ``del_mask`` / ``n_live`` when the
+    table carries deletes): chunks with ``n_live = 0`` are skipped, the
+    rest go through :func:`_decode_cells`."""
+    def column(name):
+        i = b.schema.get_field_index(name)
+        return b.column(i).to_pylist() if i >= 0 else [None] * len(b)
+
+    schemas, masks, lives = column("schema_json"), column("del_mask"), column("n_live")
+    for i, (n_rows, cells, _) in enumerate(_row_cells(b)):
+        if lives[i] != 0:
+            yield _decode_cells(dict(json.loads(schemas[i])), cells, n_rows,
+                                names, masks[i])
 
 
 # ---------- chunk windowing ----------
@@ -822,15 +915,11 @@ def _encode_batch_stream(batches: Iterator[pa.RecordBatch], part_id: int,
                 return lens.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
         return np.ones(len(b), dtype=np.int64)
 
-    # column order mirrors the DDL builders: base, bloom_<c>..., stats
-    if payload_columns is None:
-        base_fields = list(ENCODED_PA_SCHEMA)
-    else:
-        base_fields = ([f for f in ENCODED_PA_SCHEMA if f.name != "payload"]
-                       + [pa.field(f"payload_{c}", pa.binary())
-                          for c in payload_columns])
+    # column order mirrors the DDL builders: base, payload(s), bloom_<c>...,
+    # stats
     base_schema = pa.schema(
-        base_fields
+        [f for f in ENCODED_PA_SCHEMA if f.name != "payload"]
+        + [pa.field(n, pa.binary()) for n in _payload_names(payload_columns)]
         + [pa.field(f"bloom_{c}", pa.binary()) for c in bloom_columns]
         + [pa.field(f"ndv_{c}", pa.binary()) for c in ndv_columns]
         + [pa.field(f"hist_{c}", pa.list_(pa.int64())) for c in hist_columns])
@@ -856,24 +945,19 @@ def _encode_batch_stream(batches: Iterator[pa.RecordBatch], part_id: int,
             t0 = time.perf_counter()
             bloom_sink: dict[str, bytes] = {}
             ndv_sink: dict[str, bytes] = {}
+            if payload_columns not in (None, tuple(window.schema.names)):
+                raise ValueError(
+                    "split_payload column mismatch: encoding "
+                    f"{window.schema.names} but the output schema was "
+                    f"declared for {list(payload_columns)}")
+            cols, metas, pairs, n_tokens = _encode_group_columns(
+                window, compress, bloom_columns, bloom_sink,
+                ndv_columns, ndv_sink)
             if payload_columns is None:
-                blob, metas, pairs, n_tokens = encode_chunk_group(
-                    window, compress, bloom_columns=bloom_columns,
-                    bloom_sink=bloom_sink, ndv_columns=ndv_columns,
-                    ndv_sink=ndv_sink)
-                bytes_out = len(blob)
-                pay_cells: dict[str, bytes] = {"payload": blob}
+                pay_cells = {"payload": _group_blob(len(window), cols)}
             else:
-                if tuple(window.schema.names) != payload_columns:
-                    raise ValueError(
-                        "split_payload column mismatch: encoding "
-                        f"{window.schema.names} but the output schema was "
-                        f"declared for {list(payload_columns)}")
-                cols, metas, pairs, n_tokens = _encode_group_columns(
-                    window, compress, bloom_columns, bloom_sink,
-                    ndv_columns, ndv_sink)
-                pay_cells = {f"payload_{name}": cblob for name, cblob, _ in cols}
-                bytes_out = sum(len(cblob) for _, cblob, _ in cols)
+                pay_cells = {f"payload_{name}": cell for name, cell, _ in cols}
+            bytes_out = sum(len(cell) for cell in pay_cells.values())
             encode_ms = (time.perf_counter() - t0) * 1000.0
             row = {
                 "part_id": part_id,
@@ -1148,14 +1232,13 @@ def _encoded_out_ddl(payload_columns: tuple[str, ...] | None,
                      bloom_columns: tuple[str, ...],
                      ndv_columns: tuple[str, ...] = (),
                      hist_columns: tuple[str, ...] = ()) -> str:
-    """Output DDL for an encode: single-blob layout, or per-column
-    payload_<col> when ``payload_columns`` is given, plus bloom / NDV
-    sketch / magnitude histogram columns."""
-    aux = (_blooms_ddl(bloom_columns) + _ndv_ddl(ndv_columns)
-           + _hist_ddl(hist_columns))
-    if payload_columns is None:
-        return ENCODED_DDL + aux
-    return ENCODED_BASE_DDL + ", " + _payloads_ddl(payload_columns) + aux
+    """Output DDL for an encode: the payload column(s) of
+    :func:`_payload_names`, plus bloom / NDV sketch / magnitude histogram
+    columns."""
+    return (ENCODED_BASE_DDL + ", "
+            + ", ".join(f"`{n}` BINARY" for n in _payload_names(payload_columns))
+            + _blooms_ddl(bloom_columns) + _ndv_ddl(ndv_columns)
+            + _hist_ddl(hist_columns))
 
 
 def _map_splits(spark, splits: list[dict], n_slices: int,
@@ -1235,17 +1318,20 @@ def _read_splits(descs: list[tuple], batch_rows: int,
             pf.close()
 
 
-def _payloads_ddl(payload_columns: tuple[str, ...]) -> str:
-    """Per-column payload layout: one BINARY column per encoded source
-    column.  A ``decode_dataframe(columns=[...])`` over this layout selects
-    only the needed ``payload_<col>`` columns, so the projection reaches
-    the parquet reader's ReadSchema -- unselected columns' bytes are never
-    read from storage (true columnar IO pruning at 100 TB, the layout the
-    north rule's "encoded column chunks written back as binary columns"
-    describes)."""
+def _payload_names(payload_columns: tuple[str, ...] | None) -> list[str]:
+    """The encoded output columns that hold the cells: one ``payload`` blob
+    per chunk row when ``payload_columns`` is None, else one
+    ``payload_<col>`` BINARY column per source column.  A
+    ``decode_dataframe(columns=[...])`` over the latter selects only the
+    needed ``payload_<col>`` columns, so the projection reaches the parquet
+    reader's ReadSchema -- unselected columns' bytes are never read from
+    storage (the layout the north rule's "encoded column chunks written
+    back as binary columns" describes)."""
+    if payload_columns is None:
+        return ["payload"]
     for c in payload_columns:
         # same guard _check_aux_columns gives bloom/stat names: a backtick
-        # inside the name would escape the quoting below and produce
+        # inside the name would escape the DDL quoting and produce
         # malformed DDL / un-selectable payload columns (dots are fine --
         # the name is backtick-quoted whole)
         if "`" in c:
@@ -1253,7 +1339,7 @@ def _payloads_ddl(payload_columns: tuple[str, ...]) -> str:
                 f"split_payload column name {c!r} contains '`': the derived "
                 "payload_<col> output column cannot be quoted in Spark DDL; "
                 "rename the column first")
-    return ", ".join(f"`payload_{c}` BINARY" for c in payload_columns)
+    return [f"payload_{c}" for c in payload_columns]
 
 
 def _blooms_ddl(bloom_columns: tuple[str, ...]) -> str:
@@ -1840,7 +1926,8 @@ def filter_chunks_may_contain(enc_df, column: str, value):
     reads kilobytes of bloom bytes per chunk instead of the whole table --
     and the surviving chunk_ids broadcast back as a left-semi join.
     Legacy encodes without the column fall back to parsing each blob's
-    bloom section (no decompression, but the payload bytes do cross).
+    bloom section (no decompression, but the payload bytes do cross);
+    per-column cells embed no bloom, so such tables keep every chunk.
 
     datetime probes hash at the ENCODED column's timestamp unit, read from
     one chunk's schema_json (encode-side hashing uses the column's own
@@ -1898,40 +1985,25 @@ def _filter_chunks_probe(enc_df, column: str, values, require_all: bool):
     if bloom_col in enc_df.columns:
         @pandas_udf("boolean")
         def may_contain(blooms: pd.Series) -> pd.Series:
-            from .kernels.bloom import SplitBlockBloom
-
-            out = np.ones(len(blooms), dtype=bool)  # no bloom -> may contain
-            for i, buf in enumerate(blooms):
-                if buf is not None and len(buf):
-                    sb = SplitBlockBloom.from_bytes(bytes(buf))
-                    hits = sb.might_contain(hs)
-                    out[i] = bool(hits.all() if require_all else hits.any())
-            return pd.Series(out)
+            return pd.Series([_bloom_admits(buf, hs, require_all)
+                              for buf in blooms], dtype=bool)
 
         keep = (enc_df.select("chunk_id", bloom_col)
                 .filter(may_contain(F.col(bloom_col)))
                 .select("chunk_id"))
         return enc_df.join(F.broadcast(keep), "chunk_id", "left_semi")
 
-    if "payload" not in enc_df.columns:
-        # split-payload layout without a bloom_<col> column: the group
-        # blob (and its embedded bloom section) does not exist, so there
-        # is no pruning information -- every chunk may contain the values
-        return enc_df
-
     def probe(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            pay_idx = b.schema.get_field_index("payload")
-            payloads = _binary_cells(b.column(pay_idx))
-            # one zero-copy blob view + one bloom parse per chunk, all K
-            # hashes tested in a single vectorized might_contain
-            keep = [i for i in range(len(b))
-                    if group_may_contain_hashes(payloads[i], column,
-                                                hs, require_all=require_all)]
+            # one header walk + one bloom parse per chunk, all K hashes
+            # tested in a single vectorized might_contain; per-column cells
+            # carry no embedded bloom, so every such chunk is kept
+            keep = [i for i, (_, _, blooms) in enumerate(_row_cells(b))
+                    if _bloom_admits(blooms.get(column), hs, require_all)]
             if keep:
                 yield b.take(pa.array(keep, type=pa.int32()))
 
-    return enc_df.mapInArrow(probe, enc_df.schema)
+    return _map_in_arrow(enc_df, probe, enc_df.schema)
 
 
 def lookup_rows_in(enc_df, column: str, values, schema=None):
@@ -2213,6 +2285,9 @@ def decode_to_parquet(spark, enc_path: str, out_dir: str, *,
     :func:`encode_parquet_dataset` on the way out.  Returns a DataFrame of
     (path, n_rows, n_bytes) manifest rows.
 
+    Deletion bitmaps are honored like :func:`decode_dataframe`: masked
+    rows are dropped and ``n_live = 0`` chunks are not decoded.
+
     Output rolls to a new file whenever the decoded (uncompressed Arrow)
     bytes exceed ``target_file_bytes``: task memory stays bounded by one
     file's worth of data regardless of split size, and the output is
@@ -2230,38 +2305,19 @@ def decode_to_parquet(spark, enc_path: str, out_dir: str, *,
     splits = _plan_parquet_splits(enc_path, n_splits, allow_ranges=False)
     if not splits:
         return spark.createDataFrame([], "path STRING, n_rows LONG, n_bytes LONG")
-    col_set = set(columns) if columns is not None else None
 
     import pyarrow.dataset as _ds
 
     enc_ds = _ds.dataset(enc_path, format="parquet")
     enc_names = enc_ds.schema.names
-    split_layout = "payload" not in enc_names
-    if split_layout:
-        available = {n[len("payload_"):] for n in enc_names
-                     if n.startswith("payload_")}
-        if col_set is not None and col_set - available:
-            raise ValueError(
-                f"unknown columns {sorted(col_set - available)}; "
-                f"encoded table has {sorted(available)}")
-        read_cols = ["schema_json"] + [
-            n for n in enc_names if n.startswith("payload_")
-            and (col_set is None or n[len("payload_"):] in col_set)]
-    else:
-        if col_set is not None:
-            head = enc_ds.head(1, columns=["schema_json"])
-            if head.num_rows:
-                known = {n for n, _ in json.loads(head.column(0)[0].as_py())}
-                if col_set - known:
-                    raise ValueError(
-                        f"unknown columns {sorted(col_set - known)}; "
-                        f"encoded table has {sorted(known)}")
-        read_cols = ["schema_json", "payload"]
-
-    def _decode_split_row(enc_b: pa.RecordBatch, cells: list, i: int) -> pa.RecordBatch:
-        types = dict(json.loads(enc_b.column(0)[i].as_py()))
-        sel = [n[len("payload_"):] for n in enc_b.schema.names[1:]]
-        return _decode_split_cells(types, sel, [col[i] for col in cells])
+    names = None  # every column, in stored order
+    if columns is not None:
+        head = enc_ds.head(1, columns=["schema_json"])
+        names = _known_columns(columns, [
+            n for n, _ in json.loads(head.column(0)[0].as_py())]
+            if head.num_rows else list(columns))
+    read_cols = (["schema_json", "n_rows", *_payload_columns(enc_names, names)]
+                 + [c for c in ("del_mask", "n_live") if c in enc_names])
 
     manifest_schema = pa.schema([("path", pa.string()), ("n_rows", pa.int64()),
                                  ("n_bytes", pa.int64())])
@@ -2302,19 +2358,7 @@ def decode_to_parquet(spark, enc_path: str, out_dir: str, *,
             try:
                 for enc_b in pf.iter_batches(batch_size=64, row_groups=rgs,
                                              columns=read_cols):
-                    schemas = enc_b.column(0)
-                    if split_layout:
-                        cells = [_binary_cells(enc_b.column(j))
-                                 for j in range(1, enc_b.num_columns)]
-                        payloads = None
-                    else:
-                        payloads = _binary_cells(enc_b.column(1))
-                    for i in range(len(enc_b)):
-                        if split_layout:
-                            rb = _decode_split_row(enc_b, cells, i)
-                        else:
-                            pairs = json.loads(schemas[i].as_py())
-                            rb = decode_chunk_group(payloads[i], pairs, col_set)
+                    for rb in _decode_rows(enc_b, names):
                         if state["schema"] is None:
                             state["schema"] = rb.schema
                         elif not rb.schema.equals(state["schema"]):
@@ -2364,6 +2408,18 @@ def _schema_pairs(enc_df) -> list[list[str]]:
     return json.loads(row[0][0])
 
 
+def _known_columns(columns: list[str] | None, known: list[str]) -> list[str]:
+    """The requested ``columns`` in encoded order (all of ``known`` when
+    None); a name the encoded schema lacks raises ValueError."""
+    if columns is None:
+        return known
+    missing = set(columns) - set(known)
+    if missing:
+        raise ValueError(f"unknown columns {sorted(missing)}; "
+                         f"encoded schema has {sorted(known)}")
+    return [n for n in known if n in columns]
+
+
 def infer_decoded_schema(enc_df):
     return spark_schema_from_names(_schema_pairs(enc_df))
 
@@ -2371,47 +2427,35 @@ def infer_decoded_schema(enc_df):
 def decode_dataframe(enc_df, schema=None, columns: list[str] | None = None):
     """Encoded chunk-group DataFrame -> original rows (exact values).
 
-    ``columns`` selects a subset to decode.  On the single-blob layout,
-    other columns' payload sections are never decompressed (chunk-internal
-    column pruning); on the per-column layout (``split_payload=True`` at
-    encode time) the projection goes further -- only the selected
+    One path for both payload layouts: each encoded row's cells of the
+    wanted columns are decoded (other columns' cells are never
+    decompressed), and rows a ``del_mask`` deletion bitmap marks are
+    dropped (``n_live = 0`` chunks are filtered out before any payload
+    read).  ``columns`` selects a subset to decode; on the per-column
+    layout (``split_payload=True`` at encode time) only the selected
     ``payload_<col>`` columns are scanned at all, so the parquet reader of
     the encoded table skips the other columns' bytes on disk.
     """
-    if schema is None and columns is not None:
-        # validate + filter the PAIRS before Spark-type conversion: a
-        # column Spark cannot receive (TIME) must not block decoding a
-        # projection that excludes it
-        pairs = _schema_pairs(enc_df)
-        wanted = set(columns)
-        known = {n for n, _ in pairs}
-        missing = wanted - known
-        if missing:
-            raise ValueError(f"unknown columns {sorted(missing)}; "
-                             f"encoded schema has {sorted(known)}")
+    if schema is None:
+        # select from the PAIRS before Spark-type conversion: a column
+        # Spark cannot receive (TIME) must not block decoding a projection
+        # that excludes it
+        pairs = dict(_schema_pairs(enc_df))
         schema = spark_schema_from_names(
-            [p for p in pairs if p[0] in wanted])
-    elif schema is None:
-        schema = infer_decoded_schema(enc_df)
+            [[n, pairs[n]] for n in _known_columns(columns, list(pairs))])
     elif columns is not None:
         from pyspark.sql.types import StructType
 
-        wanted = set(columns)
-        known = {f.name for f in schema.fields}
-        missing = wanted - known
-        if missing:
-            raise ValueError(f"unknown columns {sorted(missing)}; "
-                             f"encoded schema has {sorted(known)}")
-        schema = StructType([f for f in schema.fields if f.name in wanted])
-    col_set = set(columns) if columns is not None else None
-
-    if "payload" not in enc_df.columns:
-        return _decode_split_dataframe(enc_df, schema)
-
-    has_mask = "del_mask" in enc_df.columns
-    if has_mask:
+        schema = StructType([schema[n] for n in
+                             _known_columns(columns, schema.fieldNames())])
+    names = schema.fieldNames()
+    # project before mapInArrow so the scan reads only these columns
+    # (column pruning reaches the parquet ReadSchema)
+    sel = ["schema_json", "n_rows", *_payload_columns(enc_df.columns, names)]
+    if "del_mask" in enc_df.columns:
         from pyspark.sql import functions as F
 
+        sel.append("del_mask")
         # fully-deleted chunks never leave storage: the n_live predicate
         # pushes into the encoded table's parquet scan
         if "n_live" in enc_df.columns:
@@ -2420,24 +2464,26 @@ def decode_dataframe(enc_df, schema=None, columns: list[str] | None = None):
 
     def decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            payloads = _binary_cells(b.column(b.schema.get_field_index("payload")))
-            schemas = b.column(b.schema.get_field_index("schema_json"))
-            mask_col = (b.column(b.schema.get_field_index("del_mask"))
-                        if has_mask else None)
-            for i in range(len(b)):
-                pairs = json.loads(schemas[i].as_py())
-                rb = decode_chunk_group(payloads[i], pairs, col_set)
-                if mask_col is not None:
-                    mbuf = mask_col[i].as_py()
-                    if mbuf is not None:
-                        keep = ~_decode_delete_mask(mbuf, len(rb))
-                        rb = rb.filter(pa.array(keep))
+            for rb in _decode_rows(b, names):
                 yield _spark_compatible_batch(rb)
 
-    # project before mapInArrow so the scan reads only these columns
-    # (column pruning reaches the parquet ReadSchema)
-    sel = ["schema_json", "payload"] + (["del_mask"] if has_mask else [])
-    return enc_df.select(*sel).mapInArrow(decode_partition, schema)
+    return _map_in_arrow(enc_df.select(*[f"`{c}`" for c in sel]),
+                         decode_partition, schema)
+
+
+def _map_in_arrow(df, fn, schema):
+    """``df.mapInArrow(fn, schema)`` for any column names: Spark re-selects
+    mapInArrow's input columns by UNQUOTED name, so a name with '.' (the
+    ``payload_<col>`` of a dotted source column) crosses the bridge under
+    a positional alias and gets its real name back in the worker."""
+    names = df.columns
+
+    def renamed(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return fn(pa.RecordBatch.from_arrays(b.columns, names=names)
+                  for b in batches)
+
+    return (df.toDF(*[f"_c{i}" for i in range(len(names))])
+            .mapInArrow(renamed, schema))
 
 
 def _spark_arrow_type(t: pa.DataType) -> pa.DataType:
@@ -2519,63 +2565,6 @@ def _binary_cells(arr) -> list:
         return [data[off[i]:off[i + 1]] if valid[i] else None
                 for i in range(n)]
     return [data[off[i]:off[i + 1]] for i in range(n)]
-
-
-def _decode_split_cells(types: dict, names: list[str], cells: list) -> pa.RecordBatch:
-    """Decode one split-layout chunk row: per-column payload cells ->
-    RecordBatch.  Shared by :func:`_decode_split_dataframe` and the
-    :func:`decode_to_parquet` split path (one copy of the cell grammar)."""
-    arrays = [_decode_any_column(cells[j], _type_from_name(types[name]))
-              for j, name in enumerate(names)]
-    return pa.RecordBatch.from_arrays(arrays, names=names)
-
-
-def _decode_split_dataframe(enc_df, schema):
-    """Decode the per-column payload layout: select ONLY schema_json plus
-    the payload_<col> columns the caller asked for -- that projection is
-    what pushes column pruning into the encoded table's parquet scan.
-    Deletion bitmaps (``del_mask``) are honored like the single-blob path:
-    ``n_live = 0`` chunks are filtered out before any payload read."""
-    names = [f.name for f in schema.fields]
-    missing = [n for n in names if f"payload_{n}" not in enc_df.columns]
-    if missing:
-        raise ValueError(
-            f"encoded DataFrame has no payload_<col> column for {missing}; "
-            f"available: {[c for c in enc_df.columns if c.startswith('payload_')]}")
-    has_mask = "del_mask" in enc_df.columns
-    if has_mask and "n_live" in enc_df.columns:
-        from pyspark.sql import functions as F
-
-        enc_df = enc_df.filter(F.col("n_live").isNull()
-                               | (F.col("n_live") > 0))
-
-    def decode_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            schemas = b.column(0)
-            pay_cols = [_binary_cells(b.column(j + 1))
-                        for j in range(len(names))]
-            mask_col = b.column(1 + len(names)) if has_mask else None
-            for i in range(len(b)):
-                types = dict(json.loads(schemas[i].as_py()))
-                rb = _decode_split_cells(
-                    types, names, [pay_cols[j][i]
-                                   for j in range(len(names))])
-                if mask_col is not None:
-                    mbuf = mask_col[i].as_py()
-                    if mbuf is not None:
-                        keep = ~_decode_delete_mask(mbuf, len(rb))
-                        rb = rb.filter(pa.array(keep))
-                yield _spark_compatible_batch(rb)
-
-    sel = ["schema_json", *[f"`payload_{n}`" for n in names]] \
-        + (["del_mask"] if has_mask else [])
-    proj = enc_df.select(*sel)
-    # mapInArrow re-selects by unquoted name: alias positionally so dotted
-    # source column names survive the bridge (the worker indexes columns
-    # by POSITION, and the output schema carries the real names)
-    proj = proj.toDF("schema_json", *[f"_p{i}" for i in range(len(names))],
-                     *(["del_mask"] if has_mask else []))
-    return proj.mapInArrow(decode_partition, schema)
 
 
 # ---------- partitioning / skew defusal ----------
@@ -2775,13 +2764,11 @@ def apply_deletes(enc_df, *, equals: dict | None = None,
     ``bloom_<col>`` SBBF (for equality predicates) short-circuit the
     chunk BEFORE decode -- a delete touching a narrow key range decodes
     only the chunks that can match, and decodes ONLY the predicate
-    columns of those.  Both payload layouts are supported; on
-    ``split_payload`` tables only the predicate columns' payload cells
-    are even read.  Re-applying deletes ORs into the existing mask
-    (idempotent for the same predicate).
+    columns' cells of those (same cell path on both payload layouts).
+    Re-applying deletes ORs into the existing mask (idempotent for the
+    same predicate).
     """
     import pyarrow.compute as pc
-    from pyspark.sql import functions as F  # noqa: F401 (parity w/ callers)
 
     equals = dict(equals or {})
     ranges = dict(ranges or {})
@@ -2814,15 +2801,8 @@ def apply_deletes(enc_df, *, equals: dict | None = None,
         return "us"
 
     eq_hashes = {c: _probe_hash(v, _unit_of(c)) for c, v in equals.items()}
-    split = "payload" not in enc_df.columns
     pred_cols = sorted({*equals, *ranges})
-    if split:
-        missing = [c for c in pred_cols
-                   if f"payload_{c}" not in enc_df.columns]
-        if missing:
-            raise ValueError(
-                f"split-layout table has no payload_<col> column for "
-                f"predicate columns {missing}")
+    _payload_columns(enc_df.columns, pred_cols)  # every predicate cell exists
     in_cols = list(enc_df.columns)
     has_mask = "del_mask" in in_cols
     base_cols = [c for c in in_cols if c not in ("del_mask", "n_live")]
@@ -2835,21 +2815,11 @@ def apply_deletes(enc_df, *, equals: dict | None = None,
     stat_cols = {c for c in (*ranges, *equals) if f"min_{c}" in col_idx}
 
     def mark_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .kernels.bloom import SplitBlockBloom
-
         for b in batches:
             masks: list[bytes | None] = []
             lives: list[int] = []
             schemas = b.column(col_idx["schema_json"])
-            if split:
-                payloads = None
-                pred_cells = {c: _binary_cells(b.column(col_idx[f"payload_{c}"]))
-                              for c in pred_cols}
-            else:
-                payloads = _binary_cells(b.column(col_idx["payload"]))
-            n_rows_col = b.column(col_idx["n_rows"])
-            for i in range(len(b)):
-                n_rows = n_rows_col[i].as_py()
+            for i, (n_rows, cells, _) in enumerate(_row_cells(b)):
                 prev_buf = (b.column(col_idx["del_mask"])[i].as_py()
                             if has_mask else None)
                 prev = (_decode_delete_mask(prev_buf, n_rows)
@@ -2875,28 +2845,18 @@ def apply_deletes(enc_df, *, equals: dict | None = None,
                     if c in equals and not (mn <= equals[c] <= mx):
                         skip = True
                 if not skip:
-                    for c in bloom_cols:
-                        bb = b.column(col_idx[f"bloom_{c}"])[i].as_py()
-                        if bb is None:
-                            continue
-                        if not bool(SplitBlockBloom.from_bytes(bb)
-                                    .might_contain(eq_hashes[c]).all()):
-                            skip = True
-                            break
+                    skip = not all(
+                        _bloom_admits(b.column(col_idx[f"bloom_{c}"])[i].as_py(),
+                                      eq_hashes[c], True)
+                        for c in bloom_cols)
                 if skip:
                     untouched()
                     continue
 
-                pairs = json.loads(schemas[i].as_py())
-                if split:
-                    # the split layout's win: ONLY the predicate columns'
-                    # cells are decoded (the rest never decompress)
-                    rb = _decode_split_cells(
-                        dict(pairs), pred_cols,
-                        [pred_cells[c][i] for c in pred_cols])
-                else:
-                    rb = decode_chunk_group(payloads[i], pairs,
-                                            set(pred_cols))
+                # ONLY the predicate columns' cells are decoded (the rest
+                # never decompress)
+                rb = _decode_cells(dict(json.loads(schemas[i].as_py())),
+                                   cells, n_rows, pred_cols)
                 match = None
                 for c, v in equals.items():
                     m = pc.fill_null(pc.equal(rb.column(c), v), False)
@@ -2923,7 +2883,7 @@ def apply_deletes(enc_df, *, equals: dict | None = None,
             yield pa.RecordBatch.from_arrays(
                 arrays, names=[*base_cols, "del_mask", "n_live"])
 
-    return enc_df.mapInArrow(mark_partition, out_ddl)
+    return _map_in_arrow(enc_df, mark_partition, out_ddl)
 
 
 def materialize_deletes(marked_enc_df, **encode_kwargs):

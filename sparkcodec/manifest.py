@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import time
 
-from .engine import assign_weight_buckets, encode_dataframe
+from .engine import _split_layout, assign_weight_buckets, encode_dataframe
 
 MANIFEST_DDL = (
     "bucket INT, job_id STRING, input_snapshot STRING, n_chunks LONG, "
@@ -51,7 +51,7 @@ def _check_resume_layout(spark, output_dir: str, split_payload: bool) -> None:
         existing = spark.read.parquet(_chunks_dir(output_dir)).columns
     except Exception:
         return  # first run: nothing written yet
-    existing_split = "payload" not in existing
+    existing_split = _split_layout(existing)
     if existing_split != split_payload:
         raise ValueError(
             f"resume layout mismatch: {_chunks_dir(output_dir)} holds "

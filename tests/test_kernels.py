@@ -272,72 +272,6 @@ def test_bss_roundtrip():
     np.testing.assert_array_equal(byte_stream_split_decode(buf, 4, 1000, "<f4"), f)
 
 
-# ---------- from-scratch snappy block codec (reference src/snappy.js) ----------
-
-def test_snappy_cross_validates_with_pyarrow():
-    """Our compressor's streams decode with pyarrow's native snappy and
-    vice versa, on empty/short/run/random/structured inputs."""
-    import random
-
-    import pyarrow as pa
-
-    from sparkcodec.kernels.snappy import snappy_compress, snappy_decompress
-
-    native = pa.Codec("snappy")
-    random.seed(7)
-    cases = [
-        b"", b"a", b"abc", b"hello hello hello hello world",
-        b"a" * 100000,                                   # one long run
-        bytes(random.getrandbits(8) for _ in range(5000)),  # incompressible
-        b"the quick brown fox " * 500,                   # periodic
-        bytes(range(256)) * 300,                         # long-period copies
-    ]
-    for d in cases:
-        ours = snappy_compress(d)
-        assert bytes(native.decompress(ours, len(d))) == d
-        assert snappy_decompress(bytes(native.compress(d))) == d
-        assert snappy_decompress(ours) == d
-
-
-def test_snappy_deterministic_and_registrable():
-    """Output bytes are run-to-run deterministic (no randomized hashing)
-    and the codec plugs into the chunk compressor registry end to end."""
-    import numpy as np
-    import pyarrow as pa
-
-    from sparkcodec.chunk import decode_array, encode_array, register_compressor
-    from sparkcodec.kernels.snappy import snappy_compress, snappy_decompress
-
-    d = b"deterministic snappy bytes " * 1000
-    assert snappy_compress(d) == snappy_compress(bytes(bytearray(d)))
-
-    register_compressor(9, "snappy_py", snappy_compress, snappy_decompress)
-    v = pa.array((np.arange(30000, dtype=np.int64) % 17).astype("str"))
-    buf, meta = encode_array(v, compress="snappy_py")
-    out = decode_array(buf)
-    assert out.to_pylist() == v.to_pylist()
-    buf_raw, _ = encode_array(v, compress=False)
-    assert len(buf) < len(buf_raw)
-
-
-def test_snappy_rejects_corrupt_streams():
-    import pytest
-
-    from sparkcodec.kernels.snappy import snappy_compress, snappy_decompress
-
-    good = snappy_compress(b"abcdabcdabcdabcd")
-    with pytest.raises(ValueError, match="bad copy offset"):
-        # a copy referencing before the start of output
-        snappy_decompress(bytes([4, 1 | (0 << 2), 0x10]))
-    with pytest.raises(ValueError, match="corrupt snappy"):
-        snappy_decompress(good[:1] + b"\x00" + good[2:])  # mangled first tag
-    # a stream cut one byte into a 2-byte copy offset must raise, never
-    # misparse the single remaining byte as the full offset
-    full = snappy_compress(b"abcdabcdabcdabcdabcdabcdabcdabcd")
-    with pytest.raises(ValueError, match="truncated"):
-        snappy_decompress(full[:-1])
-
-
 # ---------------------------------------------------------------- PFOR
 
 class TestPfor:

@@ -299,12 +299,12 @@ def test_chunk_wide_decimal_any(vals):
 def test_split_payload_cells_random_mixed_tables(data):
     """The per-column payload layout's cell grammar: random mixed tables
     encoded column-by-column (_encode_group_columns) decode exactly from
-    their individual cells (_decode_split_cells) -- the kernel invariant
+    their individual cells (_decode_cells) -- the kernel invariant
     under split_payload=True, no Spark session needed."""
     import datetime
     import decimal as dec
 
-    from sparkcodec.engine import _decode_split_cells, _encode_group_columns
+    from sparkcodec.engine import _decode_cells, _encode_group_columns
 
     n = data.draw(st.integers(min_value=0, max_value=80))
 
@@ -335,9 +335,8 @@ def test_split_payload_cells_random_mixed_tables(data):
     tbl = pa.table(arrays)
     cols, metas, pairs, _ = _encode_group_columns(tbl, True)
     type_map = dict(pairs)
-    names = [name for name, _, _ in cols]
-    cells = [blob for _, blob, _ in cols]
-    back = _decode_split_cells(type_map, names, cells)
+    cells = {name: blob for name, blob, _ in cols}
+    back = _decode_cells(type_map, cells, n)
     got = pa.Table.from_batches([back])
     for name in tbl.column_names:
         e = tbl.column(name).combine_chunks()
@@ -382,26 +381,6 @@ def test_widened_type_surface_roundtrip(data):
     back = _decode_any_column(blob, _type_from_name(_type_name(arr.type)))
     assert back.type.equals(arr.type)
     assert back.to_pylist() == arr.to_pylist()
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.one_of(
-    st.binary(max_size=4096),
-    # run/periodic-heavy inputs exercise the copy emitters hard
-    st.builds(lambda chunk, reps, tail: chunk * reps + tail,
-              st.binary(min_size=1, max_size=64),
-              st.integers(0, 200), st.binary(max_size=32)),
-))
-def test_snappy_roundtrip_and_pyarrow_interop_any(data):
-    """From-scratch snappy: self roundtrip AND cross-decode with pyarrow's
-    native codec, on arbitrary and periodic byte strings."""
-    from sparkcodec.kernels.snappy import snappy_compress, snappy_decompress
-
-    ours = snappy_compress(data)
-    assert snappy_decompress(ours) == data
-    native = pa.Codec("snappy")
-    assert bytes(native.decompress(ours, len(data))) == data
-    assert snappy_decompress(bytes(native.compress(data))) == data
 
 
 @given(st.lists(I64, max_size=300))

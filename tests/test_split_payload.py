@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sparkcodec.engine import (
+    apply_deletes,
     decode_dataframe,
     decode_to_parquet,
     encode_dataframe,
@@ -158,16 +159,18 @@ def test_split_decode_to_parquet(spark, toks, tmp_path):
 
 
 def test_split_unknown_column_raises(spark, toks):
-    enc = encode_dataframe(range_repartition(toks, 2), chunk_rows=128,
-                           auto_fastpath=False, split_payload=True)
-    with pytest.raises(ValueError, match="unknown columns"):
-        decode_dataframe(enc, columns=["nope"])
+    for split in (False, True):
+        enc = encode_dataframe(range_repartition(toks, 2), chunk_rows=128,
+                               auto_fastpath=False, split_payload=split)
+        with pytest.raises(ValueError, match="unknown columns"):
+            decode_dataframe(enc, columns=["nope"])
 
 
 def test_split_empty_input(spark, toks):
-    enc = encode_dataframe(toks.filter(F.lit(False)).repartition(2),
-                           auto_fastpath=False, split_payload=True)
-    assert enc.count() == 0
+    for split in (False, True):
+        enc = encode_dataframe(toks.filter(F.lit(False)).repartition(2),
+                               auto_fastpath=False, split_payload=split)
+        assert enc.count() == 0
 
 
 def test_encode_to_parquet_task_side_sink(spark, toks, tmp_path):
@@ -202,13 +205,14 @@ def test_encode_to_parquet_task_side_sink(spark, toks, tmp_path):
 
 
 def test_split_decode_to_parquet_unknown_column_raises(spark, toks, tmp_path):
-    enc_dir = str(tmp_path / "enc")
-    encode_dataframe(range_repartition(toks, 2), chunk_rows=128,
-                     auto_fastpath=False,
-                     split_payload=True).write.parquet(enc_dir)
-    with pytest.raises(ValueError, match="unknown columns"):
-        decode_to_parquet(spark, enc_dir, str(tmp_path / "out"),
-                          columns=["doc_ids"])
+    for split in (False, True):
+        enc_dir = str(tmp_path / f"enc_{split}")
+        encode_dataframe(range_repartition(toks, 2), chunk_rows=128,
+                         auto_fastpath=False,
+                         split_payload=split).write.parquet(enc_dir)
+        with pytest.raises(ValueError, match="unknown columns"):
+            decode_to_parquet(spark, enc_dir, str(tmp_path / "out"),
+                              columns=["doc_ids"])
 
 
 def test_task_side_sinks_use_deterministic_names(spark, toks, tmp_path):
@@ -300,7 +304,7 @@ def test_dotted_column_names_all_paths(spark, tmp_path):
     """Spark's mapInArrow re-selects input columns by UNQUOTED name, so a
     top-level name with '.' breaks analysis unless the engine aliases
     positionally around the bridge.  Both layouts, bridge + scan paths,
-    full and pruned decode must be exact."""
+    full and pruned decode, deletes and probes must be exact."""
     df = spark.range(50).selectExpr("CAST(id AS INT) AS `a.b`", "id AS plain")
     src = str(tmp_path / "src")
     df.write.parquet(src)
@@ -317,6 +321,11 @@ def test_dotted_column_names_all_paths(spark, tmp_path):
         assert got2 == exp, f"scan split={split}"
         pr = decode_dataframe(enc2, columns=["a.b"])
         assert pr.columns == ["a.b"] and pr.count() == 50
+        # deletes and the bloom probe fallback cross mapInArrow too
+        marked = apply_deletes(enc2, equals={"a.b": 3})
+        assert decode_dataframe(marked).count() == 49, f"deletes split={split}"
+        assert filter_chunks_may_contain(enc2, "a.b", 3).count() == \
+            enc2.count(), f"probe split={split}"
     # bloom/stat columns reject unsafe names with a clear message
     with pytest.raises(ValueError, match="contains"):
         encode_dataframe(df.repartition(2), auto_fastpath=False,
