@@ -39,7 +39,7 @@ def main() -> None:
     from sparkcodec.datagen import gen_rows
     from sparkcodec.engine import (
         DEFAULT_CHUNK_ROWS, DEFAULT_TOKEN_BUDGET,
-        _encode_batch_stream, decode_chunk_group,
+        _encode_batch_stream, _encode_plan, decode_chunk_group,
     )
     from sparkcodec.parquet.writer import ParquetWriter
 
@@ -53,12 +53,13 @@ def main() -> None:
         def encode_of(path):
             pf = pq.ParquetFile(path)
             batches = list(pf.iter_batches(batch_size=16384))
+            _, out_schema = _encode_plan(pf.schema_arrow.names, pf.schema_arrow)
             pf.close()
 
             def run():
                 return list(_encode_batch_stream(
-                    iter(batches), 0, DEFAULT_CHUNK_ROWS,
-                    DEFAULT_TOKEN_BUDGET, True, None, ()))
+                    iter(batches), 0, out_schema, DEFAULT_CHUNK_ROWS,
+                    DEFAULT_TOKEN_BUDGET, True))
             return run
 
         run_f1 = encode_of(f1)

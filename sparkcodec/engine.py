@@ -29,12 +29,23 @@ read side one function maps an encoded row to ``{column: cell}``
 :func:`decode_to_parquet`, :func:`apply_deletes` and the blob bloom probe
 -- loops over it and decodes through one per-row step
 (:func:`_decode_cells`).
+
+Every encode is planned once, on the driver, from the arrow types of its
+source (:func:`_encode_plan`): the bloom/ndv/hist/stat/agg columns are
+checked against those types and the encoded table's schema is built once.
+Workers emit record batches of exactly that schema and Spark is handed
+its ``from_arrow_schema``.  The scan-side jobs -- :func:`encode_parquet_dataset`,
+:func:`encode_to_parquet` and :func:`decode_to_parquet` -- run through one
+split planner (:func:`_map_splits`), and both task-side sinks commit part
+files through one atomic helper (``parquet.writer._commit_part_file``).
 """
 
 from __future__ import annotations
 
 import json
+from bisect import bisect_left, bisect_right
 from collections.abc import Callable, Iterator
+from itertools import accumulate
 
 import numpy as np
 import pandas as pd
@@ -50,17 +61,14 @@ GROUP_VERSION = 2  # v2 adds an optional per-column bloom-filter section
 DEFAULT_CHUNK_ROWS = 65536
 DEFAULT_TOKEN_BUDGET = 1 << 22  # list elements per chunk group
 
-ENCODED_BASE_DDL = (
-    "part_id INT, bucket INT, chunk_seq INT, chunk_id LONG, n_rows LONG, "
-    "n_tokens LONG, bytes_in LONG, bytes_out LONG, encode_ms DOUBLE, "
-    "schema_json STRING, meta_json STRING"
-)
-ENCODED_PA_SCHEMA = pa.schema([
+# the columns every encoded chunk row starts with, ahead of its payload
+# cell column(s) and the aux columns (see _encode_plan)
+_ENCODED_BASE = [
     ("part_id", pa.int32()), ("bucket", pa.int32()), ("chunk_seq", pa.int32()),
     ("chunk_id", pa.int64()), ("n_rows", pa.int64()), ("n_tokens", pa.int64()),
     ("bytes_in", pa.int64()), ("bytes_out", pa.int64()), ("encode_ms", pa.float64()),
-    ("schema_json", pa.string()), ("meta_json", pa.string()), ("payload", pa.binary()),
-])
+    ("schema_json", pa.string()), ("meta_json", pa.string()),
+]
 
 
 # ---------- type naming ----------
@@ -805,7 +813,7 @@ def _window_boundaries(weights: np.ndarray, max_rows: int, budget: int) -> list[
     return spans
 
 
-# ---------- Spark entry points ----------
+# ---------- the encode plan ----------
 
 def _stat_fields(schema: pa.Schema, stat_columns: tuple[str, ...]) -> list[tuple[str, pa.DataType]]:
     """(name, type) pairs for the typed per-chunk min/max columns, lowered
@@ -865,28 +873,153 @@ def _agg_fields(schema: pa.Schema, agg_columns: tuple[str, ...]) -> list[tuple[s
     return out
 
 
+def _hashed_type(t: pa.DataType) -> pa.DataType:
+    """The type of the values an aux column hashes or buckets: the element
+    type of a (nested) list column, else the column's own type."""
+    while pa.types.is_list(t) or pa.types.is_large_list(t):
+        t = t.value_type
+    return t
+
+
+def _is_bloomable(t: pa.DataType) -> bool:
+    """A column can carry an SBBF -- and an NDV sketch, over the same
+    hashes -- when its (element) values have canonical hash bytes: int/
+    string/binary/timestamp/date, or an array of such.  Array columns
+    bloom their ELEMENTS (the token-native needle shape over the
+    contract's ``tokens array<int32>`` payload)."""
+    t = _hashed_type(t)
+    return (pa.types.is_integer(t) or pa.types.is_string(t)
+            or pa.types.is_large_string(t) or pa.types.is_binary(t)
+            or pa.types.is_large_binary(t) or pa.types.is_timestamp(t)
+            or pa.types.is_date32(t))
+
+
+def _is_histable(t: pa.DataType) -> bool:
+    """Magnitude histograms need int-like (element) values: scalar
+    int/timestamp/date or an array of such (elements are bucketed)."""
+    t = _hashed_type(t)
+    return (pa.types.is_integer(t) or pa.types.is_timestamp(t)
+            or pa.types.is_date32(t))
+
+
+def _encode_plan(names: list[str], types: pa.Schema, *,
+                 read_columns: list[str] | None = None,
+                 split_payload: bool = False,
+                 bloom_columns: tuple[str, ...] = (),
+                 ndv_columns: tuple[str, ...] = (),
+                 hist_columns: tuple[str, ...] = (),
+                 stat_columns: tuple[str, ...] = (),
+                 agg_columns: tuple[str, ...] = (),
+                 ) -> tuple[tuple[str, ...] | None, pa.Schema]:
+    """The one driver-side plan of every encode: check the aux columns
+    against their arrow types and return ``(payload_columns, out_schema)``.
+    Workers emit record batches of exactly ``out_schema``
+    (:func:`_encode_batch_stream`), and Spark is handed
+    ``from_arrow_schema(out_schema)``.
+
+    ``names`` are the source columns, ``types`` holds the arrow type of
+    (at least) every aux column, ``read_columns`` is a scan-side read
+    projection.  ``payload_columns`` is None for the ``payload`` blob
+    layout, else the ``payload_<col>`` order: the read projection, or
+    ``names``.  ``out_schema`` columns: the base columns, the payload
+    cell column(s), then ``bloom_``/``ndv_``/``hist_<col>``,
+    ``min_``/``max_<col>`` and ``cnt_``/``sum_<col>``.
+
+    Rejected, so that no aux column silently never prunes:
+
+    * names with '.'/'`' (the derived bloom_<col>/min_<col> output
+      columns are referenced by unquoted name in the probe/prune paths);
+    * columns outside the read projection (stats would KeyError
+      executor-side, blooms would emit all-null);
+    * columns that do not exist;
+    * bloom/ndv columns without canonical hash bytes (float/decimal/bool)
+      and hist columns that are not int-like;
+    * stat/agg columns with no Spark-orderable or additive type
+      (``TypeError`` from :func:`_stat_fields` / :func:`_agg_fields`).
+    """
+    hashed = (*bloom_columns, *ndv_columns)
+    for c in (*hashed, *stat_columns, *agg_columns, *hist_columns):
+        if "." in c or "`" in c:
+            raise ValueError(
+                f"bloom/stat column name {c!r} contains '.' or '`': the "
+                "derived bloom_<col>/min_<col> output columns are referenced "
+                "by unquoted name in the probe/prune paths; rename the "
+                "column first")
+        if read_columns is not None and c not in read_columns:
+            raise ValueError(
+                f"bloom/stat column {c!r} is not in the read projection "
+                f"{sorted(read_columns)}; add it to columns= or drop it")
+        if c not in names:
+            raise ValueError(
+                f"bloom/stat column {c!r} does not exist; schema has "
+                f"{sorted(names)} (a misspelled bloom column "
+                "would otherwise emit all-null blooms that never prune)")
+    for c in hashed:
+        t = types.field(c).type
+        if not _is_bloomable(t):
+            raise ValueError(
+                f"bloom_columns/ndv_columns entry {c!r} has type {t}: "
+                "blooms are built -- and NDV sketches share the rule -- for "
+                "int/string/binary/timestamp/date columns (or arrays of "
+                "those, hashed element-wise) only (float/decimal/bool "
+                "values have no canonical hash bytes)")
+    for c in hist_columns:
+        t = types.field(c).type
+        if not _is_histable(t):
+            raise ValueError(
+                f"hist_columns entry {c!r} has type {t}: magnitude "
+                "histograms are built for int/timestamp/date columns (or "
+                "arrays of those, bucketed element-wise) only")
+    payload_columns = None
+    payload = ["payload"]
+    if split_payload:
+        payload_columns = tuple(names if read_columns is None else read_columns)
+        for c in payload_columns:
+            # the decoders select payload_<col> by backtick-quoted name
+            if "`" in c:
+                raise ValueError(
+                    f"split_payload column name {c!r} contains '`': the "
+                    "derived payload_<col> output column cannot be quoted "
+                    "in a Spark column reference; rename the column first")
+        payload = [f"payload_{c}" for c in payload_columns]
+    fields = [*_ENCODED_BASE,
+              *[(n, pa.binary()) for n in payload],
+              *[(f"bloom_{c}", pa.binary()) for c in bloom_columns],
+              *[(f"ndv_{c}", pa.binary()) for c in ndv_columns],
+              *[(f"hist_{c}", pa.list_(pa.int64())) for c in hist_columns],
+              *_stat_fields(types, stat_columns),
+              *_agg_fields(types, agg_columns)]
+    return payload_columns, pa.schema(fields)
+
+
 def _encode_batch_stream(batches: Iterator[pa.RecordBatch], part_id: int,
-                         chunk_rows: int, token_budget: int, compress,
-                         partition_col: str | None,
-                         bloom_columns: tuple[str, ...],
-                         seq_start: int = 0,
-                         stat_columns: tuple[str, ...] = (),
-                         agg_columns: tuple[str, ...] = (),
-                         payload_columns: tuple[str, ...] | None = None,
-                         ndv_columns: tuple[str, ...] = (),
-                         hist_columns: tuple[str, ...] = ()) -> Iterator[pa.RecordBatch]:
+                         out_schema: pa.Schema, chunk_rows: int,
+                         token_budget: int, compress,
+                         partition_col: str | None = None,
+                         seq_start: int = 0) -> Iterator[pa.RecordBatch]:
     """Shared worker-side encode loop: window incoming Arrow batches by row
     count + token weight, encode each window as one chunk group, emit one
-    encoded row per chunk.  Used by both :func:`encode_dataframe` (data via
-    the JVM Arrow bridge) and :func:`encode_parquet_dataset` (data read
-    directly from parquet by the Python task).
+    encoded row per chunk as a record batch of ``out_schema`` (the plan of
+    :func:`_encode_plan`).  Used by both :func:`encode_dataframe` (data via
+    the JVM Arrow bridge) and the scan-side encodes (data read directly
+    from parquet by the Python task).
 
-    ``payload_columns`` switches to the per-column payload layout: instead
-    of one concatenated ``payload`` blob, each source column's encoded
-    bytes land in their own ``payload_<col>`` BINARY output column (order
-    given by the tuple, which must equal the encoded columns)."""
+    The plan is read off ``out_schema``'s names: ``payload_<col>`` fields
+    select the per-column layout (their columns must equal the encoded
+    ones), and each ``bloom_``/``ndv_``/``hist_``/``min_``/``cnt_<col>``
+    field names a column to build that aux value for."""
     import time
 
+    import pyarrow.compute as pc
+
+    def planned(prefix: str) -> list[str]:
+        return [n[len(prefix):] for n in out_schema.names if n.startswith(prefix)]
+
+    payload_columns = (None if "payload" in out_schema.names
+                       else tuple(planned("payload_")))
+    bloom_columns, ndv_columns = planned("bloom_"), planned("ndv_")
+    hist_columns, stat_columns = planned("hist_"), planned("min_")
+    agg_columns = planned("cnt_")
     seq = seq_start
     pending: list[pa.RecordBatch] = []
     pending_ws: list[np.ndarray] = []  # per-batch weights, computed ONCE
@@ -894,8 +1027,6 @@ def _encode_batch_stream(batches: Iterator[pa.RecordBatch], part_id: int,
     pending_weight = 0
 
     def weights_of(b) -> np.ndarray:
-        import pyarrow.compute as pc
-
         for i, f in enumerate(b.schema):
             if f.name == partition_col:
                 continue
@@ -915,30 +1046,12 @@ def _encode_batch_stream(batches: Iterator[pa.RecordBatch], part_id: int,
                 return lens.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
         return np.ones(len(b), dtype=np.int64)
 
-    # column order mirrors the DDL builders: base, payload(s), bloom_<c>...,
-    # stats
-    base_schema = pa.schema(
-        [f for f in ENCODED_PA_SCHEMA if f.name != "payload"]
-        + [pa.field(n, pa.binary()) for n in _payload_names(payload_columns)]
-        + [pa.field(f"bloom_{c}", pa.binary()) for c in bloom_columns]
-        + [pa.field(f"ndv_{c}", pa.binary()) for c in ndv_columns]
-        + [pa.field(f"hist_{c}", pa.list_(pa.int64())) for c in hist_columns])
-    out_schema = base_schema
-    stat_fields: list[tuple[str, pa.DataType]] = []
-    agg_fields: list[tuple[str, pa.DataType]] = []
-
     def flush(tbl: pa.Table, w: np.ndarray) -> Iterator[pa.RecordBatch]:
-        nonlocal seq, out_schema, stat_fields, agg_fields
+        nonlocal seq
         bucket = part_id
         if partition_col is not None and len(tbl):
             bucket = int(tbl.column(partition_col)[0].as_py())
             tbl = tbl.drop_columns([partition_col])
-        if (stat_columns or agg_columns) and not (stat_fields or agg_fields):
-            stat_fields = _stat_fields(tbl.schema, stat_columns)
-            agg_fields = _agg_fields(tbl.schema, agg_columns)
-            out_schema = pa.schema(list(base_schema)
-                                   + [pa.field(n, t) for n, t in stat_fields]
-                                   + [pa.field(n, t) for n, t in agg_fields])
         for s, e in _window_boundaries(w, chunk_rows, token_budget):
             window = tbl.slice(s, e - s)
             bytes_in = sum(c.nbytes for c in window.columns)
@@ -981,30 +1094,23 @@ def _encode_batch_stream(batches: Iterator[pa.RecordBatch], part_id: int,
                 counts = _magnitude_bucket_counts(window.column(c))
                 row[f"hist_{c}"] = (counts.tolist() if counts is not None
                                     else None)
-            if stat_columns:
-                import pyarrow.compute as pc
-
-                for c in stat_columns:
-                    colv = window.column(c)
-                    if pa.types.is_float16(colv.type):
-                        # no halffloat min_max kernel in pyarrow; the stat
-                        # field is float32 anyway (_spark_arrow_type)
-                        colv = colv.cast(pa.float32())
-                    mm = pc.min_max(colv)
-                    row[f"min_{c}"] = mm["min"].as_py()
-                    row[f"max_{c}"] = mm["max"].as_py()
-            if agg_columns:
-                import pyarrow.compute as pc
-
-                sum_types = dict(agg_fields)
-                for c in agg_columns:
-                    colv = window.column(c)
-                    row[f"cnt_{c}"] = len(colv) - colv.null_count
-                    # cast pins the accumulator width (int64/float64); the
-                    # default min_count=1 makes an all-null chunk sum NULL,
-                    # matching SQL SUM semantics chunk-locally
-                    s = pc.sum(colv.cast(sum_types[f"sum_{c}"]))
-                    row[f"sum_{c}"] = s.as_py()
+            for c in stat_columns:
+                colv = window.column(c)
+                if pa.types.is_float16(colv.type):
+                    # no halffloat min_max kernel in pyarrow; the stat
+                    # field is float32 anyway (_spark_arrow_type)
+                    colv = colv.cast(pa.float32())
+                mm = pc.min_max(colv)
+                row[f"min_{c}"] = mm["min"].as_py()
+                row[f"max_{c}"] = mm["max"].as_py()
+            for c in agg_columns:
+                colv = window.column(c)
+                row[f"cnt_{c}"] = len(colv) - colv.null_count
+                # cast pins the accumulator width (int64/float64); the
+                # default min_count=1 makes an all-null chunk sum NULL,
+                # matching SQL SUM semantics chunk-locally
+                total = pc.sum(colv.cast(out_schema.field(f"sum_{c}").type))
+                row[f"sum_{c}"] = total.as_py()
             seq += 1
             yield pa.RecordBatch.from_pylist([row], schema=out_schema)
 
@@ -1089,301 +1195,6 @@ def _bare_parquet_scan(df) -> tuple[list[str], list[str] | None] | None:
         return None
 
 
-def _spark_ddl_of_pa(t: pa.DataType) -> str:
-    if pa.types.is_int8(t):
-        return "TINYINT"
-    if pa.types.is_int16(t):
-        return "SMALLINT"
-    if pa.types.is_int32(t):
-        return "INT"
-    if pa.types.is_int64(t):
-        return "BIGINT"
-    if pa.types.is_float32(t):
-        return "FLOAT"
-    if pa.types.is_float64(t):
-        return "DOUBLE"
-    if pa.types.is_boolean(t):
-        return "BOOLEAN"
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return "STRING"
-    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        return "BINARY"
-    if pa.types.is_timestamp(t):
-        return "TIMESTAMP"
-    if pa.types.is_date32(t):
-        return "DATE"
-    if pa.types.is_decimal(t):
-        return f"DECIMAL({t.precision},{t.scale})"
-    raise TypeError(f"unsupported stat column type {t}")
-
-
-_BLOOMABLE_SPARK = {"int", "bigint", "smallint", "tinyint", "string",
-                    "binary", "timestamp", "timestamp_ntz", "date"}
-
-
-_HISTABLE_SPARK = {"int", "bigint", "smallint", "tinyint", "timestamp",
-                   "timestamp_ntz", "date"}
-
-
-def _is_histable_typename(tname: str) -> bool:
-    """Magnitude histograms need int-like (element) values: scalar
-    int/timestamp/date or an array of such (elements are bucketed)."""
-    while tname.startswith("array<") and tname.endswith(">"):
-        tname = tname[len("array<"):-1]
-    return tname in _HISTABLE_SPARK
-
-
-def _check_hist_types(hist_columns, schema_types: dict[str, str]) -> None:
-    for c in hist_columns:
-        if c in schema_types and not _is_histable_typename(schema_types[c]):
-            raise ValueError(
-                f"hist_columns entry {c!r} has type {schema_types[c]}: "
-                "magnitude histograms are built for int/timestamp/date "
-                "columns (or arrays of those, bucketed element-wise) only")
-
-
-def _is_bloomable_typename(tname: str) -> bool:
-    """A column can carry an SBBF when its (element) values have canonical
-    hash bytes: scalar int/string/binary/timestamp/date, or an array of
-    such -- array columns bloom their ELEMENTS (the token-native needle
-    shape over the contract's ``tokens array<int32>`` payload).  EXACT
-    name matching: prefix matching would accept e.g. 'interval day to
-    second' via the 'int' prefix."""
-    while tname.startswith("array<") and tname.endswith(">"):
-        tname = tname[len("array<"):-1]
-    return tname in _BLOOMABLE_SPARK
-
-
-def _pa_simple_types(schema: pa.Schema) -> dict[str, str]:
-    """pyarrow schema -> Spark-simpleString-ish type names for the aux
-    column validation (only the distinctions the bloom check needs)."""
-    def simple(t: pa.DataType) -> str:
-        if pa.types.is_list(t) or pa.types.is_large_list(t):
-            return f"array<{simple(t.value_type)}>"
-        if pa.types.is_integer(t):
-            return "bigint"
-        if pa.types.is_string(t) or pa.types.is_large_string(t):
-            return "string"
-        if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-            return "binary"
-        if pa.types.is_timestamp(t):
-            return "timestamp"
-        if pa.types.is_date32(t):
-            return "date"
-        return str(t)
-
-    return {f.name: simple(f.type) for f in schema}
-
-
-def _check_aux_columns(bloom_columns, stat_columns,
-                       schema_types: dict[str, str] | None = None,
-                       read_columns=None) -> None:
-    """Driver-side validation shared by every encode entry point.
-
-    * names with '.'/'`' are rejected (the derived bloom_<col>/min_<col>
-      output columns are referenced by unquoted name in probe/prune paths);
-    * when a read projection is given, aux columns must be inside it
-      (otherwise stats KeyError executor-side and blooms silently emit
-      all-null -- no pruning ever);
-    * when Spark-level types are known, bloom columns must be a hashable
-      type (int/string/binary/timestamp/date): floats/decimals/bools never
-      build blooms, so accepting them silently disables pruning.
-    """
-    for c in (*bloom_columns, *stat_columns):
-        if "." in c or "`" in c:
-            raise ValueError(
-                f"bloom/stat column name {c!r} contains '.' or '`': the "
-                "derived bloom_<col>/min_<col> output columns are referenced "
-                "by unquoted name in the probe/prune paths; rename the "
-                "column first")
-        if read_columns is not None and c not in read_columns:
-            raise ValueError(
-                f"bloom/stat column {c!r} is not in the read projection "
-                f"{sorted(read_columns)}; add it to columns= or drop it")
-    if schema_types is not None:
-        for c in (*bloom_columns, *stat_columns):
-            if c not in schema_types:
-                raise ValueError(
-                    f"bloom/stat column {c!r} does not exist; schema has "
-                    f"{sorted(schema_types)} (a misspelled bloom column "
-                    "would otherwise emit all-null blooms that never prune)")
-        for c in bloom_columns:
-            if not _is_bloomable_typename(schema_types[c]):
-                raise ValueError(
-                    f"bloom_columns/ndv_columns entry {c!r} has type "
-                    f"{schema_types[c]}: blooms are built -- and NDV "
-                    "sketches share the rule -- for int/string/binary/"
-                    "timestamp/date columns (or arrays of those, hashed "
-                    "element-wise) only (float/decimal/bool values have no "
-                    "canonical hash bytes)")
-
-
-def _resolve_split_columns(columns, schema_names) -> tuple[tuple[str, ...], list[str]]:
-    """Split-payload plan for scan-side encodes: the payload_<col> output
-    order, and the per-file read projection PINNED to it (files written at
-    different times may order columns differently; the output schema is
-    fixed at plan time)."""
-    payload_columns = (tuple(columns) if columns is not None
-                       else tuple(schema_names))
-    return payload_columns, list(payload_columns)
-
-
-def _encoded_out_ddl(payload_columns: tuple[str, ...] | None,
-                     bloom_columns: tuple[str, ...],
-                     ndv_columns: tuple[str, ...] = (),
-                     hist_columns: tuple[str, ...] = ()) -> str:
-    """Output DDL for an encode: the payload column(s) of
-    :func:`_payload_names`, plus bloom / NDV sketch / magnitude histogram
-    columns."""
-    return (ENCODED_BASE_DDL + ", "
-            + ", ".join(f"`{n}` BINARY" for n in _payload_names(payload_columns))
-            + _blooms_ddl(bloom_columns) + _ndv_ddl(ndv_columns)
-            + _hist_ddl(hist_columns))
-
-
-def _map_splits(spark, splits: list[dict], n_slices: int,
-                task: Callable[[int, list[tuple]], Iterator[pa.RecordBatch]],
-                ddl: str):
-    """Run ``task(slice_index, descriptors)`` once per task slice of the
-    planned splits and return the DataFrame of its record batches
-    (``ddl``).  A descriptor is a ``(path, row_groups, skip_rows,
-    take_rows)`` tuple; skip/take bound a row RANGE within the listed row
-    groups (0/-1 = all rows), see _plan_parquet_splits on when ranges
-    appear.  ``n_slices`` (see :func:`_task_slices`) spreads the splits
-    over that many tasks: consecutive splits share a task, and its encode
-    stream then windows across them, keeping chunks full.
-
-    The descriptors ride in the task closure, not in rows: the job is
-    ``spark.range(0, n, 1, n).mapInArrow(...)``, one id per task naming
-    its slice, so the only Python worker in a task is the ``mapInArrow``
-    one.  The pickled command carries every slice; past
-    ``spark.broadcast.UDFCompressionThreshold`` (1 MB) Spark ships it as
-    a broadcast instead of inside each task.  The former descriptor
-    DataFrame, ``createDataFrame(parallelize(rows, n), ddl)``, ran
-    ``rdd.map(schema.toInternal)`` in a second Python worker inside every
-    task ahead of the ``mapInArrow`` one -- a worker round-trip per task
-    for a handful of tuples.
-
-    Slice ``i`` of ``n`` is ``rows[i*L//n : (i+1)*L//n]`` over the ``L``
-    planned splits: the contiguous slicing ``parallelize`` used when ``n``
-    divides ``L`` or ``L <= n``.  Otherwise ``parallelize`` sliced batches
-    of ``L//n`` rows, so one task could get twice the splits of another;
-    here task sizes differ by at most one split."""
-    rows = [(s["path"], s["row_groups"], s.get("skip_rows", 0),
-             s.get("take_rows", -1)) for s in splits]
-    L = len(rows)
-    slices = [rows[i * L // n_slices:(i + 1) * L // n_slices]
-              for i in range(n_slices)]
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            for i in b.column(0).to_numpy():
-                yield from task(int(i), slices[i])
-
-    return spark.range(0, n_slices, 1, n_slices).mapInArrow(run, ddl)
-
-
-def _read_splits(descs: list[tuple], batch_rows: int,
-                 columns) -> Iterator[pa.RecordBatch]:
-    """Worker-side split reader: the record batches of every
-    ``(path, row_groups, skip_rows, take_rows)`` descriptor of a task
-    slice (see :func:`_map_splits`), read locally with pyarrow.  A ranged
-    split slices [skip, skip+take) out of its row groups' row sequence and
-    stops reading as soon as the range is exhausted (parquet cannot seek
-    inside a row group, so rows before ``skip`` are decoded and discarded
-    -- the bounded price of parallelizing a grossly oversized row
-    group)."""
-    import pyarrow.parquet as pq
-
-    for p, rgs, skip, take in descs:
-        pf = pq.ParquetFile(p)
-        try:
-            remaining = None if take < 0 else take
-            for rb in pf.iter_batches(batch_size=batch_rows,
-                                      row_groups=rgs, columns=columns):
-                if skip:
-                    if skip >= len(rb):
-                        skip -= len(rb)
-                        continue
-                    rb = rb.slice(skip)
-                    skip = 0
-                if remaining is not None:
-                    if remaining <= 0:
-                        break
-                    if len(rb) > remaining:
-                        rb = rb.slice(0, remaining)
-                    remaining -= len(rb)
-                yield rb
-        finally:
-            pf.close()
-
-
-def _payload_names(payload_columns: tuple[str, ...] | None) -> list[str]:
-    """The encoded output columns that hold the cells: one ``payload`` blob
-    per chunk row when ``payload_columns`` is None, else one
-    ``payload_<col>`` BINARY column per source column.  A
-    ``decode_dataframe(columns=[...])`` over the latter selects only the
-    needed ``payload_<col>`` columns, so the projection reaches the parquet
-    reader's ReadSchema -- unselected columns' bytes are never read from
-    storage (the layout the north rule's "encoded column chunks written
-    back as binary columns" describes)."""
-    if payload_columns is None:
-        return ["payload"]
-    for c in payload_columns:
-        # same guard _check_aux_columns gives bloom/stat names: a backtick
-        # inside the name would escape the DDL quoting and produce
-        # malformed DDL / un-selectable payload columns (dots are fine --
-        # the name is backtick-quoted whole)
-        if "`" in c:
-            raise ValueError(
-                f"split_payload column name {c!r} contains '`': the derived "
-                "payload_<col> output column cannot be quoted in Spark DDL; "
-                "rename the column first")
-    return [f"payload_{c}" for c in payload_columns]
-
-
-def _blooms_ddl(bloom_columns: tuple[str, ...]) -> str:
-    """Dedicated top-level SBBF columns, one per bloomed input column:
-    the probe path scans ONLY these (plus chunk_id), so at 100 TB a point
-    lookup reads kilobytes of bloom bytes per chunk instead of the full
-    payload blob."""
-    if not bloom_columns:
-        return ""
-    return ", " + ", ".join(f"bloom_{c} BINARY" for c in bloom_columns)
-
-
-def _ndv_ddl(ndv_columns: tuple[str, ...]) -> str:
-    """Dedicated top-level HLL sketch columns (4 KiB each): the NDV path
-    scans ONLY these, so a dataset-level distinct count reads kilobytes of
-    registers per chunk and zero payload bytes."""
-    if not ndv_columns:
-        return ""
-    return ", " + ", ".join(f"ndv_{c} BINARY" for c in ndv_columns)
-
-
-def _hist_ddl(hist_columns: tuple[str, ...]) -> str:
-    """Per-chunk magnitude histograms (128 BIGINT counts): merge by
-    elementwise sum in pure codegen (posexplode + group-by), giving
-    dataset-level value-distribution profiles without payload decode."""
-    if not hist_columns:
-        return ""
-    return ", " + ", ".join(f"hist_{c} ARRAY<BIGINT>" for c in hist_columns)
-
-
-def _stats_ddl(pa_schema: pa.Schema, stat_columns: tuple[str, ...]) -> str:
-    parts = []
-    for name, t in _stat_fields(pa_schema, stat_columns):
-        parts.append(f"{name} {_spark_ddl_of_pa(t)}")
-    return (", " + ", ".join(parts)) if parts else ""
-
-
-def _aggs_ddl(pa_schema: pa.Schema, agg_columns: tuple[str, ...]) -> str:
-    parts = []
-    for name, t in _agg_fields(pa_schema, agg_columns):
-        parts.append(f"{name} {_spark_ddl_of_pa(t)}")
-    return (", " + ", ".join(parts)) if parts else ""
-
-
 def encode_dataframe(df, chunk_rows: int = DEFAULT_CHUNK_ROWS,
                      token_budget: int = DEFAULT_TOKEN_BUDGET,
                      compress: bool = True, partition_col: str | None = None,
@@ -1438,19 +1249,22 @@ def encode_dataframe(df, chunk_rows: int = DEFAULT_CHUNK_ROWS,
     elementwise sum, so :func:`magnitude_histogram` profiles a column's
     value distribution (skew, sign mix, width classes) metadata-only.
     """
-    _df_types = {f.name: f.dataType.simpleString() for f in df.schema}
-    _check_aux_columns((*bloom_columns, *ndv_columns),
-                       (*stat_columns, *agg_columns, *hist_columns),
-                       _df_types)
-    _check_hist_types(hist_columns, _df_types)
-    if partition_col is not None and partition_col in (*bloom_columns,
-                                                       *ndv_columns,
-                                                       *hist_columns,
-                                                       *stat_columns,
-                                                       *agg_columns):
+    from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_type
+
+    aux = (*bloom_columns, *ndv_columns, *hist_columns, *stat_columns,
+           *agg_columns)
+    if partition_col is not None and partition_col in aux:
         raise ValueError(
             f"partition_col {partition_col!r} cannot be a bloom/stat/agg "
             "column: it is dropped from the encoded payload")
+    # the plan needs arrow types for the aux columns only
+    types = pa.schema([(f.name, to_arrow_type(f.dataType))
+                       for f in df.schema if f.name in aux])
+    _, out_schema = _encode_plan(
+        [f.name for f in df.schema if f.name != partition_col], types,
+        split_payload=split_payload, bloom_columns=bloom_columns,
+        ndv_columns=ndv_columns, hist_columns=hist_columns,
+        stat_columns=stat_columns, agg_columns=agg_columns)
     if auto_fastpath and partition_col is None:
         scan = _bare_parquet_scan(df)
         if scan is not None:
@@ -1463,25 +1277,11 @@ def encode_dataframe(df, chunk_rows: int = DEFAULT_CHUNK_ROWS,
                 split_payload=split_payload, ndv_columns=ndv_columns,
                 hist_columns=hist_columns)
 
-    payload_columns: tuple[str, ...] | None = None
-    if split_payload:
-        payload_columns = tuple(f.name for f in df.schema
-                                if f.name != partition_col)
-    out_ddl = _encoded_out_ddl(payload_columns, bloom_columns, ndv_columns,
-                               hist_columns)
-    if stat_columns or agg_columns:
-        pa_schema = pa.schema([
-            (f.name, _pa_type_of_spark(f.dataType)) for f in df.schema
-            if f.name in (*stat_columns, *agg_columns)
-        ])
-        out_ddl += _stats_ddl(pa_schema, stat_columns)
-        out_ddl += _aggs_ddl(pa_schema, agg_columns)
-
     # Spark's mapInArrow re-selects its input columns by UNQUOTED name, so
     # a top-level name containing '.' breaks analysis before our code ever
     # runs.  Rename positionally to safe aliases for the bridge crossing
     # and restore the real names inside the worker (schema_json and the
-    # payload_<col> DDL keep the ORIGINAL names).
+    # payload_<col> columns keep the ORIGINAL names).
     orig_names = [f.name for f in df.schema]
     needs_rename = any("." in n or "`" in n for n in orig_names)
     if needs_rename:
@@ -1501,45 +1301,16 @@ def encode_dataframe(df, chunk_rows: int = DEFAULT_CHUNK_ROWS,
             batches = (pa.RecordBatch.from_arrays(list(b.columns),
                                                   names=orig_names)
                        for b in batches)
-        yield from _encode_batch_stream(batches, part_id, chunk_rows,
-                                        token_budget, compress,
-                                        partition_col, bloom_columns,
-                                        stat_columns=stat_columns,
-                                        agg_columns=agg_columns,
-                                        payload_columns=payload_columns,
-                                        ndv_columns=ndv_columns,
-                                        hist_columns=hist_columns)
+        yield from _encode_batch_stream(batches, part_id, out_schema,
+                                        chunk_rows, token_budget, compress,
+                                        partition_col)
 
-    return df.mapInArrow(encode_partition, out_ddl)
+    return df.mapInArrow(encode_partition, from_arrow_schema(out_schema))
 
 
-def _pa_type_of_spark(dt) -> pa.DataType:
-    from pyspark.sql.types import (
-        BooleanType, DateType, DecimalType, DoubleType, FloatType,
-        IntegerType, LongType, StringType, TimestampType,
-    )
+# ---------- scan-side jobs ----------
 
-    if isinstance(dt, IntegerType):
-        return pa.int32()
-    if isinstance(dt, LongType):
-        return pa.int64()
-    if isinstance(dt, FloatType):
-        return pa.float32()
-    if isinstance(dt, DoubleType):
-        return pa.float64()
-    if isinstance(dt, BooleanType):
-        return pa.bool_()
-    if isinstance(dt, StringType):
-        return pa.string()
-    if isinstance(dt, TimestampType):
-        return pa.timestamp("us")
-    if isinstance(dt, DateType):
-        return pa.date32()
-    if isinstance(dt, DecimalType):
-        return pa.decimal128(dt.precision, dt.scale)
-    raise TypeError(f"unsupported stat column spark type {dt}")
-
-
+_READ_BATCH_ROWS = 16384  # pyarrow record batch size of the split reader
 _MIN_RANGE_ROWS = 16384  # never range-split below this many rows per piece
 _MAX_RANGES = 8          # bounds the decode-and-discard amplification
 _MIN_SPLIT_BYTES = 16 << 20  # uncompressed bytes under which extra splits
@@ -1564,8 +1335,11 @@ def _plan_parquet_splits(path, n_splits: int,
     instead of serializing onto one core.  Ranges are capped at
     _MAX_RANGES pieces of >= _MIN_RANGE_ROWS rows: rows before ``skip``
     are decoded and discarded by the reader, so the amplification stays
-    bounded and tiny tables are never over-chunked.  Callers that need
-    file-atomic semantics (include_source_file resume) pass False.
+    bounded and tiny tables are never over-chunked.  Each range lists only
+    the row groups its rows overlap, with ``skip`` counted from the first
+    of them, so a small group packed ahead of the oversized one is not
+    decoded again by every range.  Callers that need file-atomic
+    semantics (include_source_file resume) pass False.
 
     Each split also records its (uncompressed) ``n_bytes`` so callers can
     choose how many task slices to spread the splits over (see
@@ -1598,6 +1372,7 @@ def _plan_parquet_splits(path, n_splits: int,
                    "n_rows": cur_rows, "n_bytes": cur_bytes})
     if not allow_ranges:
         return splits
+    rg_rows = {(f, rg): nr for f, rg, nr, _ in units}
     out: list[dict] = []
     for s in splits:
         rows = s["n_rows"]
@@ -1607,11 +1382,15 @@ def _plan_parquet_splits(path, n_splits: int,
             out.append(s)
             continue
         per = rows // k
+        # starts[j]: first row of the split's j-th row group
+        starts = [0, *accumulate(rg_rows[s["path"], g] for g in s["row_groups"])]
         for i in range(k):
             lo = i * per
             hi = rows if i == k - 1 else (i + 1) * per
-            out.append({"path": s["path"], "row_groups": s["row_groups"],
-                        "skip_rows": lo, "take_rows": hi - lo,
+            first = bisect_right(starts, lo) - 1
+            out.append({"path": s["path"],
+                        "row_groups": s["row_groups"][first:bisect_left(starts, hi)],
+                        "skip_rows": lo - starts[first], "take_rows": hi - lo,
                         "n_bytes": s["n_bytes"] // k})
     return out
 
@@ -1634,13 +1413,147 @@ def _task_slices(splits: list[dict], min_splits: int | None) -> int:
                    max(min_splits, total_bytes // _MIN_SPLIT_BYTES, 1)))
 
 
+def _map_splits(spark, path, n_splits: int | None,
+                task: Callable[[int, list[tuple]], Iterator[pa.RecordBatch]],
+                schema: pa.Schema, allow_ranges: bool = True):
+    """The one planner of the scan-side jobs: plan the parquet splits of
+    ``path`` on the driver (:func:`_plan_parquet_splits`), spread them over
+    task slices, run ``task(slice_index, descriptors)`` once per slice and
+    return the DataFrame of its record batches (arrow ``schema``; empty
+    when the input has no row groups).  ``n_splits=None`` plans twice the
+    cluster parallelism and lets :func:`_task_slices` size the task count
+    from the input bytes; a given ``n_splits`` runs one task per split.
+
+    A descriptor is a ``(path, row_groups, skip_rows, take_rows)`` tuple;
+    skip/take bound a row RANGE within the listed row groups (0/-1 = all
+    rows), see _plan_parquet_splits on when ranges appear.  Consecutive
+    splits share a task, and its encode stream then windows across them,
+    keeping chunks full.
+
+    The descriptors ride in the task closure, not in rows: the job is
+    ``spark.range(0, n, 1, n).mapInArrow(...)``, one id per task naming
+    its slice, so the only Python worker in a task is the ``mapInArrow``
+    one.  The pickled command carries every slice; past
+    ``spark.broadcast.UDFCompressionThreshold`` (1 MB) Spark ships it as
+    a broadcast instead of inside each task.  The former descriptor
+    DataFrame, ``createDataFrame(parallelize(rows, n), ddl)``, ran
+    ``rdd.map(schema.toInternal)`` in a second Python worker inside every
+    task ahead of the ``mapInArrow`` one -- a worker round-trip per task
+    for a handful of tuples.
+
+    Slice ``i`` of ``n`` is ``rows[i*L//n : (i+1)*L//n]`` over the ``L``
+    planned splits: the contiguous slicing ``parallelize`` used when ``n``
+    divides ``L`` or ``L <= n``.  Otherwise ``parallelize`` sliced batches
+    of ``L//n`` rows, so one task could get twice the splits of another;
+    here task sizes differ by at most one split."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    min_splits = None
+    if n_splits is None:
+        min_splits = max(spark.sparkContext.defaultParallelism, 2)
+        n_splits = min_splits * 2
+    splits = _plan_parquet_splits(path, n_splits, allow_ranges)
+    if not splits:
+        return spark.createDataFrame([], from_arrow_schema(schema))
+    n_slices = _task_slices(splits, min_splits)
+    rows = [(s["path"], s["row_groups"], s.get("skip_rows", 0),
+             s.get("take_rows", -1)) for s in splits]
+    L = len(rows)
+    slices = [rows[i * L // n_slices:(i + 1) * L // n_slices]
+              for i in range(n_slices)]
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            for i in b.column(0).to_numpy():
+                yield from task(int(i), slices[i])
+
+    return spark.range(0, n_slices, 1, n_slices).mapInArrow(
+        run, from_arrow_schema(schema))
+
+
+def _read_splits(descs: list[tuple], columns) -> Iterator[pa.RecordBatch]:
+    """Worker-side split reader: the record batches of every
+    ``(path, row_groups, skip_rows, take_rows)`` descriptor of a task
+    slice (see :func:`_map_splits`), read locally with pyarrow.  A ranged
+    split slices [skip, skip+take) out of its row groups' row sequence and
+    stops reading as soon as the range is exhausted (parquet cannot seek
+    inside a row group, so rows before ``skip`` are decoded and discarded
+    -- the bounded price of parallelizing a grossly oversized row
+    group)."""
+    import pyarrow.parquet as pq
+
+    for p, rgs, skip, take in descs:
+        pf = pq.ParquetFile(p)
+        try:
+            remaining = None if take < 0 else take
+            for rb in pf.iter_batches(batch_size=_READ_BATCH_ROWS,
+                                      row_groups=rgs, columns=columns):
+                if skip:
+                    if skip >= len(rb):
+                        skip -= len(rb)
+                        continue
+                    rb = rb.slice(skip)
+                    skip = 0
+                if remaining is not None:
+                    if remaining <= 0:
+                        break
+                    if len(rb) > remaining:
+                        rb = rb.slice(0, remaining)
+                    remaining -= len(rb)
+                yield rb
+        finally:
+            pf.close()
+
+
+def _scan_encode(path, columns: list[str] | None, chunk_rows: int,
+                 token_budget: int, compress: bool,
+                 include_source_file: bool = False, **aux,
+                 ) -> tuple[pa.Schema, Callable[[int, list[tuple]], Iterator[pa.RecordBatch]]]:
+    """A scan-side encode: its plan, from the dataset's arrow schema (``aux``
+    are :func:`_encode_plan`'s keywords), and its per-task encode stream.
+    Returns ``(out_schema, encode_split)``; ``encode_split(part_id,
+    descriptors)`` reads the task's splits with pyarrow and yields encoded
+    chunk rows of ``out_schema``.  ``include_source_file`` appends a
+    ``source_file`` column and runs one encode stream per file, so chunks
+    never span two files."""
+    import pyarrow.dataset as ds
+
+    ds_schema = ds.dataset(path, format="parquet").schema
+    payload_columns, stream_schema = _encode_plan(
+        ds_schema.names, ds_schema, read_columns=columns, **aux)
+    if payload_columns is not None:
+        # the per-file read projection is PINNED to the payload_<col>
+        # order: files written at different times may order columns
+        # differently, the output schema is fixed at plan time
+        columns = list(payload_columns)
+
+    def encode_split(part_id: int, descs: list[tuple]) -> Iterator[pa.RecordBatch]:
+        if not include_source_file:
+            yield from _encode_batch_stream(
+                _read_splits(descs, columns), part_id, stream_schema,
+                chunk_rows, token_budget, compress)
+            return
+        # chunk_seq stays unique within the task across the file streams
+        seq = 0
+        for d in descs:
+            for rb in _encode_batch_stream(
+                    _read_splits([d], columns), part_id, stream_schema,
+                    chunk_rows, token_budget, compress, seq_start=seq):
+                seq += len(rb)
+                yield rb.append_column(
+                    "source_file", pa.array([d[0]] * len(rb), type=pa.string()))
+
+    if include_source_file:
+        return stream_schema.append(pa.field("source_file", pa.string())), encode_split
+    return stream_schema, encode_split
+
+
 def encode_parquet_dataset(spark, path, *,
                            chunk_rows: int = DEFAULT_CHUNK_ROWS,
                            token_budget: int = DEFAULT_TOKEN_BUDGET,
                            compress: bool = True,
                            columns: list[str] | None = None,
                            bloom_columns: tuple[str, ...] = (),
-                           batch_rows: int = 16384,
                            n_splits: int | None = None,
                            include_source_file: bool = False,
                            stat_columns: tuple[str, ...] = (),
@@ -1659,102 +1572,23 @@ def encode_parquet_dataset(spark, path, *,
     the Spark-native equivalent of its streaming file writer,
     reference: src/parquet-writer.js:63-144).
 
-    ``path`` may also be an explicit list of parquet files.
-    ``include_source_file`` adds a ``source_file`` column and guarantees
-    chunks never span two files -- the unit the file-granular resumable
-    job (manifest.run_encode_files_job) overwrites idempotently.
+    ``path`` may also be an explicit list of parquet files.  ``n_splits``
+    pins the number of planned splits, one task each (default: twice the
+    cluster parallelism, spread over as many tasks as the input bytes
+    warrant).  ``include_source_file`` adds a ``source_file`` column and
+    guarantees chunks never span two files -- the unit the file-granular
+    resumable job (manifest.run_encode_files_job) overwrites idempotently.
     """
-    min_splits = None
-    if n_splits is None:
-        min_splits = max(spark.sparkContext.defaultParallelism, 2)
-        n_splits = min_splits * 2
+    out_schema, encode_split = _scan_encode(
+        path, columns, chunk_rows, token_budget, compress,
+        include_source_file, split_payload=split_payload,
+        bloom_columns=bloom_columns, ndv_columns=ndv_columns,
+        hist_columns=hist_columns, stat_columns=stat_columns,
+        agg_columns=agg_columns)
     # file-tagged encodes keep whole files per descriptor (resume
     # overwrites per file, so ranges would break idempotent replacement)
-    splits = _plan_parquet_splits(path, n_splits,
-                                  allow_ranges=not include_source_file)
-    # column order must track the worker's record batches: base, payloads
-    # (split mode), blooms, stats, then source_file LAST (it is
-    # append_column'd after the encode stream, so it must also come last
-    # in the DDL)
-    payload_columns: tuple[str, ...] | None = None
-    if split_payload or stat_columns or agg_columns or bloom_columns \
-            or ndv_columns or hist_columns:
-        import pyarrow.dataset as ds
-
-        ds_schema = ds.dataset(path, format="parquet").schema
-    if stat_columns or agg_columns or bloom_columns or ndv_columns \
-            or hist_columns:
-        _check_aux_columns((*bloom_columns, *ndv_columns),
-                           (*stat_columns, *agg_columns, *hist_columns),
-                           _pa_simple_types(ds_schema),
-                           read_columns=columns)
-        _check_hist_types(hist_columns, _pa_simple_types(ds_schema))
-    if split_payload:
-        payload_columns, columns = _resolve_split_columns(columns, ds_schema.names)
-    out_ddl = _encoded_out_ddl(payload_columns, bloom_columns, ndv_columns,
-                               hist_columns)
-    if stat_columns:
-        out_ddl += _stats_ddl(ds_schema, stat_columns)
-    if agg_columns:
-        out_ddl += _aggs_ddl(ds_schema, agg_columns)
-    if include_source_file:
-        out_ddl += ", source_file STRING"
-    if not splits:
-        return spark.createDataFrame([], out_ddl)
-
-    def encode_split(part_id: int, descs: list[tuple]) -> Iterator[pa.RecordBatch]:
-        if not include_source_file:
-            yield from _encode_batch_stream(
-                _read_splits(descs, batch_rows, columns), part_id,
-                chunk_rows, token_budget, compress, None, bloom_columns,
-                stat_columns=stat_columns, agg_columns=agg_columns,
-                payload_columns=payload_columns, ndv_columns=ndv_columns,
-                hist_columns=hist_columns)
-            return
-
-        # file-tagged mode: one encode stream per file so chunks never
-        # span files; chunk_seq stays unique within the task
-        seq = 0
-        for d in descs:
-            for rb in _encode_batch_stream(_read_splits([d], batch_rows, columns),
-                                           part_id, chunk_rows, token_budget,
-                                           compress, None, bloom_columns,
-                                           seq_start=seq,
-                                           stat_columns=stat_columns,
-                                           agg_columns=agg_columns,
-                                           payload_columns=payload_columns,
-                                           ndv_columns=ndv_columns,
-                                           hist_columns=hist_columns):
-                seq += len(rb)
-                yield rb.append_column(
-                    "source_file", pa.array([d[0]] * len(rb), type=pa.string()))
-
-    return _map_splits(spark, splits, _task_slices(splits, min_splits),
-                       encode_split, out_ddl)
-
-
-def _sweep_stale_parts(out_dir: str) -> None:
-    """Driver-side pre-clean for the task-side sinks: remove part files
-    (and orphaned .tmp files) that OUR writers produced in a previous run
-    into the same directory.  Task-side deterministic names only replace
-    files for pids that execute THIS run -- a rerun with fewer splits, or
-    a pid whose task yields no rows, would otherwise leave a previous
-    run's file in place and ``spark.read.parquet(out_dir)`` would silently
-    mix chunks from different runs.  Only files matching our own naming
-    scheme (part-NNNNN.parquet / part-NNNNN-NNN.parquet and their tmp
-    leftovers) are touched, so pointing at a directory with foreign files
-    raises on the subsequent read instead of deleting user data."""
-    import glob
-    import os
-    import re
-
-    # \d{5,}/\d{3,}: the {:05d}/{:03d} task-side formats WIDEN past their
-    # padding (pid >= 100000, file_idx >= 1000) -- a fixed-width pattern
-    # would leave exactly those high-index files stale
-    own = re.compile(r"part-\d{5,}(-\d{3,})?\.parquet(\.[0-9a-f]{8}\.tmp)?$")
-    for p in glob.glob(os.path.join(out_dir, "part-*")):
-        if own.search(os.path.basename(p)):
-            os.remove(p)
+    return _map_splits(spark, path, n_splits, encode_split, out_schema,
+                       allow_ranges=not include_source_file)
 
 
 def encode_to_parquet(spark, path, out_dir: str, *,
@@ -1765,97 +1599,64 @@ def encode_to_parquet(spark, path, out_dir: str, *,
                       bloom_columns: tuple[str, ...] = (),
                       stat_columns: tuple[str, ...] = (),
                       split_payload: bool = False,
-                      batch_rows: int = 16384,
-                      n_splits: int | None = None,
-                      container_compression: str = "zstd"):
-    """Scan-side encode with a TASK-SIDE sink: each Python task reads its
-    parquet splits with pyarrow, encodes, and streams the encoded chunk
-    rows straight into one parquet file in ``out_dir`` via pyarrow's
-    writer -- encoded payload bytes never cross the Python->JVM Arrow
-    bridge in either direction (the encode mirror of
+                      n_splits: int | None = None):
+    """Scan-side encode with a TASK-SIDE sink: each Python task runs the
+    encode stream of :func:`encode_parquet_dataset` and writes its encoded
+    chunk rows straight into one parquet file ``part-NNNNN.parquet`` in
+    ``out_dir`` via pyarrow's writer -- encoded payload bytes never cross
+    the Python->JVM Arrow bridge in either direction (the encode mirror of
     :func:`decode_to_parquet`).  On a real cluster the same tasks write
     directly to S3/HDFS.  Returns a DataFrame of
     (path, n_chunks, n_rows, n_tokens, bytes_in, bytes_out) manifest rows
     -- the only thing that crosses back to the JVM.
 
-    ``container_compression`` compresses the CONTAINER parquet file
-    (payload cells are already chunk-compressed; zstd-1 on top mostly
-    squeezes the JSON metadata columns).
+    The container file is zstd-1 compressed: payload cells are already
+    chunk-compressed, so it mostly squeezes the JSON metadata columns.
+    Part files of an earlier run into ``out_dir`` are removed first.
     """
+    import itertools
     import os
+
+    import pyarrow.parquet as pq
+
+    from .parquet.writer import _commit_part_file, _sweep_stale_parts
 
     os.makedirs(out_dir, exist_ok=True)
     _sweep_stale_parts(out_dir)
-    min_splits = None
-    if n_splits is None:
-        min_splits = max(spark.sparkContext.defaultParallelism, 2)
-        n_splits = min_splits * 2
-    splits = _plan_parquet_splits(path, n_splits)
-    manifest_ddl = ("path STRING, n_chunks LONG, n_rows LONG, "
-                    "n_tokens LONG, bytes_in LONG, bytes_out LONG")
-    if not splits:
-        return spark.createDataFrame([], manifest_ddl)
-    payload_columns: tuple[str, ...] | None = None
-    if split_payload or stat_columns or bloom_columns:
-        import pyarrow.dataset as ds
+    out_schema, encode_split = _scan_encode(
+        path, columns, chunk_rows, token_budget, compress,
+        split_payload=split_payload, bloom_columns=bloom_columns,
+        stat_columns=stat_columns)
+    manifest = pa.schema([
+        ("path", pa.string()), ("n_chunks", pa.int64()),
+        ("n_rows", pa.int64()), ("n_tokens", pa.int64()),
+        ("bytes_in", pa.int64()), ("bytes_out", pa.int64()),
+    ])
 
-        ds_schema = ds.dataset(path, format="parquet").schema
-    if stat_columns or bloom_columns:
-        _check_aux_columns(bloom_columns, stat_columns,
-                           _pa_simple_types(ds_schema),
-                           read_columns=columns)
-    if split_payload:
-        payload_columns, columns = _resolve_split_columns(columns, ds_schema.names)
-
-    def encode_split(pid: int, descs: list[tuple]) -> Iterator[pa.RecordBatch]:
-        import uuid
-
-        import pyarrow.parquet as pq
-
-        writer = None
+    def sink(pid: int, descs: list[tuple]) -> Iterator[pa.RecordBatch]:
+        stream = encode_split(pid, descs)
+        first = next(stream, None)
+        if first is None:
+            return  # no rows, no part file
         n_chunks = 0
         sums = dict.fromkeys(("n_rows", "n_tokens", "bytes_in", "bytes_out"), 0)
-        # deterministic final name per partition: a retried or speculative
-        # attempt re-produces the same bytes and atomically REPLACES the
-        # file instead of committing a duplicate; the tmp name is unique
-        # per attempt so concurrent attempts never clobber each other's
-        # in-progress writes
-        fpath = os.path.join(out_dir, f"part-{pid:05d}.parquet")
-        tmp_path = f"{fpath}.{uuid.uuid4().hex[:8]}.tmp"
-        try:
-            for rb in _encode_batch_stream(
-                    _read_splits(descs, batch_rows, columns), pid,
-                    chunk_rows, token_budget, compress, None, bloom_columns,
-                    stat_columns=stat_columns,
-                    payload_columns=payload_columns):
-                if writer is None:
-                    writer = pq.ParquetWriter(tmp_path, rb.schema,
-                                              compression=container_compression,
-                                              compression_level=1)
-                writer.write_batch(rb)
-                n_chunks += len(rb)
-                for k in sums:
-                    sums[k] += int(pa.compute.sum(rb.column(k)).as_py() or 0)
-            if writer is None:
-                return
-            writer.close()
-            writer = None
-            os.replace(tmp_path, fpath)
-        finally:
-            if writer is not None:
-                writer.close()
-            if os.path.exists(tmp_path):
-                os.remove(tmp_path)
-        yield pa.RecordBatch.from_pylist(
-            [{"path": fpath, "n_chunks": n_chunks, **sums}],
-            schema=pa.schema([
-                ("path", pa.string()), ("n_chunks", pa.int64()),
-                ("n_rows", pa.int64()), ("n_tokens", pa.int64()),
-                ("bytes_in", pa.int64()), ("bytes_out", pa.int64()),
-            ]))
 
-    return _map_splits(spark, splits, _task_slices(splits, min_splits),
-                       encode_split, manifest_ddl)
+        def write(tmp: str) -> None:
+            nonlocal n_chunks
+            with pq.ParquetWriter(tmp, out_schema, compression="zstd",
+                                  compression_level=1) as writer:
+                for rb in itertools.chain([first], stream):
+                    writer.write_batch(rb)
+                    n_chunks += len(rb)
+                    for k in sums:
+                        sums[k] += int(pa.compute.sum(rb.column(k)).as_py() or 0)
+
+        fpath = os.path.join(out_dir, f"part-{pid:05d}.parquet")
+        _commit_part_file(fpath, write)
+        yield pa.RecordBatch.from_pylist(
+            [{"path": fpath, "n_chunks": n_chunks, **sums}], schema=manifest)
+
+    return _map_splits(spark, path, n_splits, sink, manifest)
 
 
 def _probe_hash(value, ts_unit: str = "us") -> np.ndarray:
@@ -2274,44 +2075,37 @@ def probe_rows(enc_df, *, equals: dict | None = None,
 
 def decode_to_parquet(spark, enc_path: str, out_dir: str, *,
                       columns: list[str] | None = None,
-                      compression: str = "zstd",
-                      row_group_rows: int = 1 << 20,
                       n_splits: int | None = None,
                       target_file_bytes: int = 256 << 20):
     """Scan-side decode sink: Python tasks read encoded chunk rows with
     pyarrow, decode them, and stream the rows into OUR parquet writer
-    (sparkcodec.parquet.ParquetWriter) -- decoded token arrays never cross
-    the Python->JVM Arrow bridge, the mirror of
+    (sparkcodec.parquet.ParquetWriter, zstd) -- decoded token arrays never
+    cross the Python->JVM Arrow bridge, the mirror of
     :func:`encode_parquet_dataset` on the way out.  Returns a DataFrame of
     (path, n_rows, n_bytes) manifest rows.
 
     Deletion bitmaps are honored like :func:`decode_dataframe`: masked
     rows are dropped and ``n_live = 0`` chunks are not decoded.
 
-    Output rolls to a new file whenever the decoded (uncompressed Arrow)
-    bytes exceed ``target_file_bytes``: task memory stays bounded by one
-    file's worth of data regardless of split size, and the output is
-    bounded-size files -- the shape object stores want."""
+    Output rolls to a new file ``part-NNNNN-NNN.parquet`` whenever the
+    decoded (uncompressed Arrow) bytes exceed ``target_file_bytes``: task
+    memory stays bounded by one file's worth of data regardless of split
+    size, and the output is bounded-size files -- the shape object stores
+    want.  Part files of an earlier run into ``out_dir`` are removed
+    first."""
     import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    _sweep_stale_parts(out_dir)
-    min_splits = None
-    if n_splits is None:
-        min_splits = max(spark.sparkContext.defaultParallelism, 2)
-        n_splits = min_splits * 2
-    # encoded containers carry one row per chunk (tiny row counts), and
-    # this reader consumes whole splits: no row ranges here
-    splits = _plan_parquet_splits(enc_path, n_splits, allow_ranges=False)
-    if not splits:
-        return spark.createDataFrame([], "path STRING, n_rows LONG, n_bytes LONG")
+    from pathlib import Path
 
     import pyarrow.dataset as _ds
 
+    from .parquet.writer import _commit_part_file, _sweep_stale_parts
+
+    os.makedirs(out_dir, exist_ok=True)
+    _sweep_stale_parts(out_dir)
     enc_ds = _ds.dataset(enc_path, format="parquet")
     enc_names = enc_ds.schema.names
     names = None  # every column, in stored order
-    if columns is not None:
+    if columns is not None and enc_names:  # no names: no files, no rows
         head = enc_ds.head(1, columns=["schema_json"])
         names = _known_columns(columns, [
             n for n, _ in json.loads(head.column(0)[0].as_py())]
@@ -2323,8 +2117,6 @@ def decode_to_parquet(spark, enc_path: str, out_dir: str, *,
                                  ("n_bytes", pa.int64())])
 
     def decode_split(pid: int, descs: list[tuple]) -> Iterator[pa.RecordBatch]:
-        import uuid
-
         import pyarrow.parquet as pq
 
         from .parquet.writer import ParquetWriter
@@ -2334,19 +2126,9 @@ def decode_to_parquet(spark, enc_path: str, out_dir: str, *,
 
         def flush():
             buf = state["writer"].finish()
-            # deterministic final name per (partition, file index): a
-            # retried/speculative attempt re-produces the same files and
-            # atomically replaces them, never duplicates
             path = os.path.join(
                 out_dir, f"part-{pid:05d}-{state['file_idx']:03d}.parquet")
-            tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
-            try:
-                with open(tmp, "wb") as f:
-                    f.write(buf)
-                os.replace(tmp, path)
-            finally:
-                if os.path.exists(tmp):
-                    os.remove(tmp)
+            _commit_part_file(path, lambda tmp: Path(tmp).write_bytes(buf))
             row = {"path": path, "n_rows": state["n_rows"],
                    "n_bytes": len(buf)}
             state.update(writer=None, n_rows=0, arrow_bytes=0,
@@ -2370,8 +2152,7 @@ def decode_to_parquet(spark, enc_path: str, out_dir: str, *,
                                 "encode's output directory separately")
                         if state["writer"] is None:
                             state["writer"] = ParquetWriter(
-                                rb.schema, compression=compression,
-                                row_group_rows=row_group_rows)
+                                rb.schema, compression="zstd")
                         state["writer"].write(pa.Table.from_batches([rb]))
                         state["n_rows"] += len(rb)
                         state["arrow_bytes"] += sum(
@@ -2382,22 +2163,11 @@ def decode_to_parquet(spark, enc_path: str, out_dir: str, *,
                 pf.close()
         if state["writer"] is not None:
             yield flush()
-        # a previous run into this dir may have rolled MORE files for this
-        # partition (different data or target_file_bytes): remove stale
-        # higher-index files so spark.read.parquet(out_dir) never mixes
-        # old rows with this run's output
-        import glob as _glob
-        import re as _re
 
-        for stale in _glob.glob(os.path.join(out_dir,
-                                             f"part-{pid:05d}-*.parquet")):
-            # \d{3,}: file_idx widens past 3 digits at 1000 rolled files
-            m = _re.search(r"-(\d{3,})\.parquet$", stale)
-            if m and int(m.group(1)) >= state["file_idx"]:
-                os.remove(stale)
-
-    return _map_splits(spark, splits, _task_slices(splits, min_splits),
-                       decode_split, "path STRING, n_rows LONG, n_bytes LONG")
+    # encoded containers carry one row per chunk (tiny row counts), and
+    # this reader consumes whole splits: no row ranges here
+    return _map_splits(spark, enc_path, n_splits, decode_split,
+                       manifest_schema, allow_ranges=False)
 
 
 def _schema_pairs(enc_df) -> list[list[str]]:
@@ -2806,10 +2576,12 @@ def apply_deletes(enc_df, *, equals: dict | None = None,
     in_cols = list(enc_df.columns)
     has_mask = "del_mask" in in_cols
     base_cols = [c for c in in_cols if c not in ("del_mask", "n_live")]
-    out_ddl = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in enc_df.schema.fields if f.name in base_cols
-    ) + ", del_mask BINARY, n_live BIGINT"
+    from pyspark.sql.types import BinaryType, LongType, StructField, StructType
+
+    out_schema = StructType(
+        [f for f in enc_df.schema.fields if f.name in base_cols]
+        + [StructField("del_mask", BinaryType()),
+           StructField("n_live", LongType())])
     col_idx = {c: i for i, c in enumerate(in_cols)}
     bloom_cols = {c for c in equals if f"bloom_{c}" in col_idx}
     stat_cols = {c for c in (*ranges, *equals) if f"min_{c}" in col_idx}
@@ -2883,7 +2655,7 @@ def apply_deletes(enc_df, *, equals: dict | None = None,
             yield pa.RecordBatch.from_arrays(
                 arrays, names=[*base_cols, "del_mask", "n_live"])
 
-    return _map_in_arrow(enc_df, mark_partition, out_ddl)
+    return _map_in_arrow(enc_df, mark_partition, out_schema)
 
 
 def materialize_deletes(marked_enc_df, **encode_kwargs):

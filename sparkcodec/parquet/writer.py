@@ -23,6 +23,7 @@ filters and ColumnIndex/OffsetIndex page indexes.
 from __future__ import annotations
 
 import zlib
+from collections.abc import Callable
 
 import numpy as np
 import pyarrow as pa
@@ -1189,19 +1190,67 @@ def _file_metadata(schema: pa.Schema, leaves: list[_Leaf], row_groups, n_rows: i
     ])
 
 
+def _sweep_stale_parts(out_dir: str) -> None:
+    """Driver-side pre-clean for the task-side sinks: remove part files
+    (and orphaned .tmp files) that OUR writers produced in a previous run
+    into the same directory.  Task-side deterministic names only replace
+    files for pids that execute THIS run -- a rerun with fewer splits, or
+    a pid whose task yields no rows, would otherwise leave a previous
+    run's file in place and ``spark.read.parquet(out_dir)`` would silently
+    mix chunks from different runs.  Only files matching our own naming
+    scheme (part-NNNNN.parquet / part-NNNNN-NNN.parquet and their tmp
+    leftovers) are touched, so pointing at a directory with foreign files
+    raises on the subsequent read instead of deleting user data."""
+    import glob
+    import os
+    import re
+
+    # \d{5,}/\d{3,}: the {:05d}/{:03d} task-side formats WIDEN past their
+    # padding (pid >= 100000, file_idx >= 1000) -- a fixed-width pattern
+    # would leave exactly those high-index files stale
+    own = re.compile(r"part-\d{5,}(-\d{3,})?\.parquet(\.[0-9a-f]{8}\.tmp)?$")
+    for p in glob.glob(os.path.join(out_dir, "part-*")):
+        if own.search(os.path.basename(p)):
+            os.remove(p)
+
+
+def _commit_part_file(path: str, write: Callable[[str], object]) -> None:
+    """The atomic part-file commit of every task-side sink: ``write(tmp)``
+    fills a tmp file next to ``path``, which then replaces ``path``.  The
+    final name is deterministic per task, so a retried or speculative
+    attempt re-produces the same file and REPLACES it instead of
+    committing a duplicate; the tmp name is unique per attempt, so
+    concurrent attempts never clobber each other's in-progress writes,
+    and a failed write leaves no tmp file behind."""
+    import os
+    import uuid
+
+    tmp = f"{path}.{uuid.uuid4().hex[:8]}.tmp"
+    try:
+        write(tmp)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
 def write_partitioned_parquet(df, out_dir: str, *, compression: str = "gzip",
                               use_dictionary: bool = True,
                               row_group_rows: int = 1 << 20,
                               bloom_columns: tuple[str, ...] = ()):
-    """Spark sink: each partition writes one parquet file produced by OUR
-    encoders (the reference's file-sink analog, reference: src/node.js:16-70).
-    Returns a DataFrame of (path, n_rows, n_bytes) manifest rows."""
+    """Spark sink: each partition writes one parquet file
+    ``part-NNNNN.parquet`` produced by OUR encoders (the reference's
+    file-sink analog, reference: src/node.js:16-70).  Part files of an
+    earlier run into ``out_dir`` are removed first, and a retried task
+    replaces its file, so a rerun never duplicates rows.  Returns a
+    DataFrame of (path, n_rows, n_bytes) manifest rows."""
     import os
-    import uuid
+    from pathlib import Path
 
     from pyspark import TaskContext
 
     os.makedirs(out_dir, exist_ok=True)
+    _sweep_stale_parts(out_dir)
 
     def sink(batches):
         import pyarrow as pa
@@ -1216,11 +1265,8 @@ def write_partitioned_parquet(df, out_dir: str, *, compression: str = "gzip",
                                   use_dictionary=use_dictionary,
                                   row_group_rows=row_group_rows,
                                   bloom_columns=bloom_columns)
-        path = os.path.join(out_dir, f"part-{pid:05d}-{uuid.uuid4().hex[:8]}.parquet")
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(buf)
-        os.rename(tmp, path)
+        path = os.path.join(out_dir, f"part-{pid:05d}.parquet")
+        _commit_part_file(path, lambda tmp: Path(tmp).write_bytes(buf))
         yield pa.RecordBatch.from_pylist(
             [{"path": path, "n_rows": len(table), "n_bytes": len(buf)}],
             schema=pa.schema([("path", pa.string()), ("n_rows", pa.int64()),

@@ -19,6 +19,7 @@ from sparkcodec.engine import (
     GROUP_MAGIC,
     _encode_batch_stream,
     _encode_group_columns,
+    _encode_plan,
     _group_blob,
     _group_sections,
     _split_layout,
@@ -67,15 +68,17 @@ def test_fixed_blob_bytes_are_pinned():
 def test_blob_cells_equal_the_per_column_cells_of_the_same_window():
     t = _fixed_table()
 
-    def encoded_row(payload_columns):
+    def encoded_row(split):
+        _, out_schema = _encode_plan(t.column_names, t.schema,
+                                     split_payload=split,
+                                     bloom_columns=("doc_id",))
         rows = list(_encode_batch_stream(
-            iter(t.to_batches()), 0, 1 << 20, 1 << 30, True, None,
-            ("doc_id",), payload_columns=payload_columns))
+            iter(t.to_batches()), 0, out_schema, 1 << 20, 1 << 30, True))
         assert len(rows) == 1
         return rows[0]
 
-    blob_row = encoded_row(None)
-    split_row = encoded_row(tuple(t.column_names))
+    blob_row = encoded_row(False)
+    split_row = encoded_row(True)
     blob = blob_row.column(blob_row.schema.get_field_index("payload"))[0].as_py()
     n_rows, cells, blooms = _group_sections(blob)
     assert n_rows == len(t) and list(cells) == t.column_names

@@ -174,6 +174,27 @@ def test_spark_partitioned_parquet_sink(spark, tmp_path):
     assert n == toks.count()
 
 
+def test_partitioned_sink_rerun_keeps_one_copy(spark, tmp_path):
+    """Writing into a directory that already holds this sink's output
+    replaces it: part files are named by partition id (a retried task
+    replaces its own file) and earlier part files are removed first, so a
+    rerun -- here also with fewer partitions -- never duplicates rows."""
+    import os
+
+    from sparkcodec.parquet.writer import write_partitioned_parquet
+
+    df = spark.range(1000).selectExpr("id", "CAST(id % 7 AS INT) AS k")
+    out = str(tmp_path / "files")
+    write_partitioned_parquet(df.repartition(4), out).collect()
+    write_partitioned_parquet(df.repartition(4), out).collect()
+    assert spark.read.parquet(out).count() == 1000
+    write_partitioned_parquet(df.repartition(2), out).collect()
+    assert sorted(os.listdir(out)) == ["part-00000.parquet",
+                                       "part-00001.parquet"]
+    back = spark.read.parquet(out)
+    assert sorted(r["id"] for r in back.collect()) == list(range(1000))
+
+
 def test_page_indexes_written_and_valid():
     """ColumnIndex/OffsetIndex parity (SURVEY M3/M4): parse the structures
     back with our generic thrift reader and validate them against the data."""

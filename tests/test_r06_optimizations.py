@@ -200,6 +200,56 @@ def test_ranged_split_reader_covers_exact_rows(tmp_path):
     assert all(hi - lo >= 16384 for lo, hi in covered)
 
 
+def test_ranged_splits_list_only_overlapping_row_groups(spark, tmp_path):
+    """A small row group packed ahead of an oversized one: each range lists
+    only the row groups its rows overlap, with skip counted from the first
+    of them, so no range but the first decodes the small group again.  The
+    ranges read the same rows as the untrimmed descriptors did, and here
+    -- each range below chunk_rows, so one flush per task -- encode to the
+    same payload bytes.  (The split reader's batches continue across row
+    groups, so a range that fills chunk_rows mid-stream may cut its chunks
+    at other rows than the untrimmed plan did; the rows are the same.)"""
+    import hashlib
+
+    import pyarrow.parquet as pq
+
+    from sparkcodec.engine import (
+        DEFAULT_CHUNK_ROWS, DEFAULT_TOKEN_BUDGET, _encode_batch_stream,
+        _encode_plan, _plan_parquet_splits, _read_splits,
+        encode_parquet_dataset,
+    )
+
+    ids = np.arange(101_000, dtype=np.int64)
+    schema = pa.schema([("id", pa.int64()), ("v", pa.int64())])
+    path = str(tmp_path / "small_then_big.parquet")
+    with pq.ParquetWriter(path, schema) as w:
+        w.write_table(pa.table({"id": ids[:1000], "v": ids[:1000] * 3}))
+        w.write_table(pa.table({"id": ids[1000:], "v": ids[1000:] * 3}),
+                      row_group_size=100_000)
+    splits = _plan_parquet_splits(path, 4)
+    assert [(s["row_groups"], s["skip_rows"], s["take_rows"])
+            for s in splits] == [([0, 1], 0, 25250), ([1], 24250, 25250),
+                                 ([1], 49500, 25250), ([1], 74750, 25250)]
+    untrimmed = [(path, [0, 1], i * 25250, 25250) for i in range(4)]
+    for s, old in zip(splits, untrimmed):
+        got = pa.Table.from_batches(list(_read_splits(
+            [(path, s["row_groups"], s["skip_rows"], s["take_rows"])], None)))
+        assert got.equals(pa.Table.from_batches(list(_read_splits([old], None))))
+
+    def payloads(tbl):
+        return {r["chunk_id"]: hashlib.sha256(r["payload"]).hexdigest()
+                for r in tbl.select(["chunk_id", "payload"]).to_pylist()}
+
+    _, out_schema = _encode_plan(schema.names, schema)
+    want = {}
+    for pid, old in enumerate(untrimmed):  # n_splits given: one task each
+        want.update(payloads(pa.Table.from_batches(list(_encode_batch_stream(
+            _read_splits([old], None), pid, out_schema, DEFAULT_CHUNK_ROWS,
+            DEFAULT_TOKEN_BUDGET, True)))))
+    got = payloads(encode_parquet_dataset(spark, path, n_splits=4).toArrow())
+    assert got == want and len(got) == 4
+
+
 def test_plan_splits_no_ranges_when_disallowed(tmp_path):
     import pyarrow.parquet as pq
 
@@ -260,7 +310,9 @@ def test_rank_decode_int32_exact():
 
 # ---------- task driving: spark.range ids, descriptors in the closure ----------
 
-_DESC_DDL = "task LONG, path STRING, rgs ARRAY<INT>, skip LONG, take LONG"
+_DESC_SCHEMA = pa.schema([("task", pa.int64()), ("path", pa.string()),
+                          ("rgs", pa.list_(pa.int32())),
+                          ("skip", pa.int64()), ("take", pa.int64())])
 
 
 def _ids_file(path, lo: int, n: int, rg_rows: int) -> None:
@@ -271,25 +323,32 @@ def _ids_file(path, lo: int, n: int, rg_rows: int) -> None:
                    row_group_size=rg_rows)
 
 
-def _split_inputs(tmp_path, case: str):
-    """(path, planned splits, task slices) for one split-planning case."""
+def _split_inputs(spark, tmp_path, case: str):
+    """(path, n_splits, planned splits, task slices) for one split-planning
+    case, planned as the scan-side jobs plan them."""
     from sparkcodec.engine import _plan_parquet_splits, _task_slices
 
+    # None: the default plan, 2x the parallelism spread adaptively;
+    # "pinned": n_splits given -> one task per split
+    n_splits = 6 if case == "pinned" else None
+    min_splits = max(spark.sparkContext.defaultParallelism, 2)
     if case == "ranged":  # one 200k-row row group -> skip/take ranges
         path = str(tmp_path / "one_rg.parquet")
         _ids_file(path, 0, 200_000, 200_000)
-        splits = _plan_parquet_splits(path, 8)
+        splits = _plan_parquet_splits(path, min_splits * 2)
         assert len(splits) > 1 and all("skip_rows" in s for s in splits)
-        return path, splits, _task_slices(splits, 4)
+        return path, n_splits, splits, _task_slices(splits, min_splits)
     sizes = [3000, 7000, 1000, 5000, 4000]
     path, lo = [], 0
     for k, n in enumerate(sizes):
         path.append(str(tmp_path / f"in-{k}.parquet"))
         _ids_file(path[-1], lo, n, 1000)
         lo += n
-    splits = _plan_parquet_splits(path, 6)
-    # "pinned": n_splits given -> one task per split
-    return path, splits, _task_slices(splits, None if case == "pinned" else 4)
+    if case == "pinned":
+        splits = _plan_parquet_splits(path, n_splits)
+        return path, n_splits, splits, _task_slices(splits, None)
+    splits = _plan_parquet_splits(path, min_splits * 2)
+    return path, n_splits, splits, _task_slices(splits, min_splits)
 
 
 @pytest.mark.parametrize("case", ["ranged", "multi_file", "pinned"])
@@ -298,7 +357,7 @@ def test_map_splits_reads_every_split_once(spark, tmp_path, case):
     runs of the plan in order, and the task count is the slice count."""
     from sparkcodec.engine import _map_splits
 
-    _, splits, n_slices = _split_inputs(tmp_path, case)
+    path, n_splits, splits, n_slices = _split_inputs(spark, tmp_path, case)
     planned = [(s["path"], s["row_groups"], s.get("skip_rows", 0),
                 s.get("take_rows", -1)) for s in splits]
 
@@ -306,13 +365,11 @@ def test_map_splits_reads_every_split_once(spark, tmp_path, case):
         yield pa.RecordBatch.from_pylist(
             [{"task": i, "path": p, "rgs": rgs, "skip": skip, "take": take}
              for p, rgs, skip, take in descs],
-            schema=pa.schema([("task", pa.int64()), ("path", pa.string()),
-                              ("rgs", pa.list_(pa.int32())),
-                              ("skip", pa.int64()), ("take", pa.int64())]))
+            schema=_DESC_SCHEMA)
 
     if case == "pinned":
         assert n_slices == len(splits)
-    df = _map_splits(spark, splits, n_slices, task, _DESC_DDL)
+    df = _map_splits(spark, path, n_splits, task, _DESC_SCHEMA)
     assert df.rdd.getNumPartitions() == n_slices
     got = [tuple(r) for r in df.collect()]
     assert [(p, list(g), s, t) for _, p, g, s, t in got] == planned
@@ -326,7 +383,7 @@ def test_map_splits_reads_every_split_once(spark, tmp_path, case):
 def test_scan_encode_covers_every_row_once(spark, tmp_path, case):
     from sparkcodec.engine import decode_dataframe, encode_parquet_dataset
 
-    path, _, _ = _split_inputs(tmp_path, case)
+    path, _, _, _ = _split_inputs(spark, tmp_path, case)
     enc = encode_parquet_dataset(
         spark, path, n_splits=6 if case == "pinned" else None)
     ids = np.sort(np.array([r["id"] for r in decode_dataframe(enc).collect()]))
@@ -338,7 +395,7 @@ def test_scan_encode_source_file_tags_each_file_once(spark, tmp_path):
 
     from sparkcodec.engine import decode_dataframe, encode_parquet_dataset
 
-    paths, _, _ = _split_inputs(tmp_path, "multi_file")
+    paths, _, _, _ = _split_inputs(spark, tmp_path, "multi_file")
     enc = encode_parquet_dataset(spark, paths, include_source_file=True)
     for p in paths:
         part = enc.filter(enc.source_file == p).drop("source_file")
@@ -355,8 +412,8 @@ def test_encode_to_parquet_matches_parallelize_placement(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from sparkcodec.engine import (
-        DEFAULT_TOKEN_BUDGET, _encode_batch_stream, _plan_parquet_splits,
-        _read_splits, _task_slices, encode_to_parquet,
+        DEFAULT_TOKEN_BUDGET, _encode_batch_stream, _encode_plan,
+        _plan_parquet_splits, _read_splits, _task_slices, encode_to_parquet,
     )
 
     rng = np.random.default_rng(4)
@@ -385,10 +442,12 @@ def test_encode_to_parquet_matches_parallelize_placement(spark, tmp_path):
     assert len(manifest) == n_slices
     keep = ["part_id", "chunk_seq", "chunk_id", "n_rows", "n_tokens",
             "bytes_in", "bytes_out", "schema_json", "payload"]
+    schema = pq.read_schema(src)
+    _, out_schema = _encode_plan(schema.names, schema)
     for pid, descs in enumerate(placed):
         want = pa.Table.from_batches(list(_encode_batch_stream(
-            _read_splits(descs, 16384, None), pid, chunk_rows,
-            DEFAULT_TOKEN_BUDGET, True, None, ())))
+            _read_splits(descs, None), pid, out_schema, chunk_rows,
+            DEFAULT_TOKEN_BUDGET, True)))
         fpath = str(out / f"part-{pid:05d}.parquet")
         assert pq.read_table(fpath).select(keep).equals(want.select(keep))
         assert manifest[fpath]["n_chunks"] == want.num_rows
@@ -415,3 +474,26 @@ def test_scan_side_plans_have_no_rdd_scan(spark, tmp_path):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Range" in plan, plan
         assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
+
+def test_scan_side_jobs_on_input_without_rows(spark, tmp_path):
+    """The planner's empty-input return serves all three scan-side jobs:
+    an input with no row groups gives an empty DataFrame of the job's
+    schema -- also for decode_to_parquet(columns=...) over a directory
+    without files, where there is no schema to check the columns against."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from sparkcodec.engine import (
+        decode_to_parquet, encode_parquet_dataset, encode_to_parquet,
+    )
+
+    src = str(tmp_path / "empty.parquet")
+    pq.write_table(pa.table({"id": pa.array([], pa.int64())}), src)
+    enc = encode_parquet_dataset(spark, src, stat_columns=("id",))
+    assert enc.count() == 0 and "min_id" in enc.columns
+    assert encode_to_parquet(spark, src, str(tmp_path / "enc")).collect() == []
+    assert os.listdir(tmp_path / "enc") == []
+    assert decode_to_parquet(spark, str(tmp_path / "enc"), str(tmp_path / "dec"),
+                             columns=["id"]).collect() == []
